@@ -586,13 +586,12 @@ def test_udf_worker_prelude_idempotent_driver_side():
     UDF body, including reused workers."""
     import gc
 
-    from usearch_spark.session import freeze_worker_gc, udf_worker_prelude
+    from usearch_spark.session import udf_worker_prelude
 
     udf_worker_prelude()
     frozen1 = gc.get_freeze_count()
     udf_worker_prelude()  # idempotent: nothing new frozen beyond interim allocs
     assert gc.isenabled()
-    assert freeze_worker_gc is udf_worker_prelude  # back-compat alias
     assert gc.get_freeze_count() >= frozen1
     gc.unfreeze()  # leave the test process as found
 

@@ -197,7 +197,9 @@ def test_no_cache_in_plans(path):
     release_local_checkpoint idiom, not .cache(): cached blocks linger
     until the caller's clearCache and re-enter the planner as
     InMemoryRelation (r15-verdict #8).  Operators with genuinely
-    session-lived indexes (operators/search.py) are out of scope."""
+    session-lived indexes (operators/search.py) are out of scope.  Any
+    argument form counts: ``.persist(StorageLevel...)`` pins blocks the
+    same way."""
     tree = ast.parse(path.read_text(), filename=str(path))
     sites = [
         f"{path.relative_to(REPO)}:{n.lineno}"
@@ -205,6 +207,56 @@ def test_no_cache_in_plans(path):
         if isinstance(n, ast.Call)
         and isinstance(n.func, ast.Attribute)
         and n.func.attr in ("cache", "persist")
-        and not n.args
     ]
     assert not sites, f".cache()/.persist() in plans/ (use localCheckpoint + release): {sites}"
+
+
+def _single_task_sites(tree: ast.Module) -> list[tuple[str, str, int]]:
+    """(pattern, enclosing top-level function, line) for every call to
+    ``mallopt``, ``gc.disable`` (any alias of ``gc``) or
+    ``<df>.coalesce(1).mapInPandas`` in a module."""
+    out = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for n in ast.walk(top):
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)):
+                continue
+            f = n.func
+            if f.attr == "mallopt":
+                out.append(("mallopt", owner, n.lineno))
+            elif f.attr == "disable" and isinstance(f.value, ast.Name) and "gc" in f.value.id:
+                out.append(("gc.disable", owner, n.lineno))
+            elif (
+                f.attr == "mapInPandas"
+                and isinstance(f.value, ast.Call)
+                and isinstance(f.value.func, ast.Attribute)
+                and f.value.func.attr == "coalesce"
+                and [ast.dump(a) for a in f.value.args] == [ast.dump(ast.Constant(1))]
+            ):
+                out.append(("coalesce(1).mapInPandas", owner, n.lineno))
+    return out
+
+
+# the one single-task worker and its launcher (plans/iterative.py), and
+# the one malloc-threshold helper (session.py)
+SINGLE_TASK_HARNESS = {
+    ("plans/iterative.py", "_single_task_worker"),
+    ("plans/iterative.py", "local_task"),
+    ("session.py", "_keep_malloc_heap"),
+}
+
+
+def test_single_task_prelude_lives_only_in_the_harness():
+    """The single-task solves share ONE worker (plans/iterative.local_task):
+    the malloc thresholds, the paused cyclic gc and the
+    ``coalesce(1).mapInPandas`` launch may not be re-copied into a
+    family module (ten hand-copied preludes preceded the harness)."""
+    pkg = REPO / "usearch_spark"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = str(path.relative_to(pkg))
+        for pattern, owner, line in _single_task_sites(ast.parse(path.read_text(), filename=str(path))):
+            in_plans = rel.startswith("plans/")
+            if (in_plans or pattern == "mallopt") and (rel, owner) not in SINGLE_TASK_HARNESS:
+                sites.append(f"usearch_spark/{rel}:{line} {pattern} in {owner}")
+    assert not sites, f"single-task worker code outside the harness (use plans.iterative.local_task): {sites}"

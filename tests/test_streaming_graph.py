@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -150,3 +151,44 @@ def test_warm_start_converges_in_fewer_steps(spark, tmp_path):
     # cold mode runs the full fixed budget; warm converges early
     assert cold_steps == 40
     assert 0 < warm_steps < cold_steps
+
+
+@pytest.mark.parametrize("rerank_every", [1, 5])
+def test_merge_releases_epoch_checkpoints(spark, tmp_path, rerank_every):
+    """A long-running stream must not pin one more checkpoint block set
+    per micro-batch: each epoch releases its upsert checkpoint and, on a
+    re-rank, the full edge set and PageRank's input checkpoints, as soon
+    as the scores are written.  Only a re-rank's result frame (a select
+    over its checkpoint, so no eager release applies) may wait for GC —
+    with one re-rank in five epochs the growth is O(1), and with a re-rank
+    every epoch it stays below one block set per epoch."""
+    import gc
+
+    src = str(tmp_path / "src")
+    os.makedirs(src, exist_ok=True)
+    for b in range(5):  # five epochs of disjoint 20-vertex rings
+        ring = _ring_edges(spark, 20).select(
+            F.concat(F.lit(f"{b}_"), "src").alias("src"), F.concat(F.lit(f"{b}_"), "dst").alias("dst")
+        )
+        tmp = str(tmp_path / f"t{b}")
+        ring.coalesce(1).write.parquet(tmp)
+        dst = f"{src}/batch{b}.parquet"
+        shutil.copy(glob.glob(tmp + "/part-*.parquet")[0], dst)
+        os.utime(dst, (1000000 + b * 100,) * 2)
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    # settle leftovers from earlier tests first: otherwise their GC-driven
+    # cleanup during this run could hide this run's growth
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    before = pinned().size()
+    for _ in range(20):
+        time.sleep(0.25)
+        before, prev = pinned().size(), before
+        if before == prev:
+            break
+    target = str(tmp_path / "g")
+    _drain(_stream(spark, src), target, str(tmp_path / "ck"), rerank_every=rerank_every)
+    assert read_stream_meta(target)["fragments"] == [f"v{i}" for i in range(5)]
+    growth = pinned().size() - before
+    reranks = 5 // rerank_every
+    assert growth <= reranks, f"pinned RDDs grew by {growth} over 5 epochs ({reranks} re-ranks)"

@@ -165,3 +165,25 @@ def test_forced_pruned_above_max_starts_raises(spark):
         node2vec_walks(e, big, steps=1, strategy="pruned")
     # the auto path silently picks ranked for the same set
     random_walks(e, big, steps=1, strategy="auto")
+
+
+def test_forced_pruned_counts_distinct_starts(spark):
+    """The forced-'pruned' guard bounds the DISTINCT start ids (the set the
+    pruned path collects), not the start rows: more than
+    PRUNED_MAX_STARTS rows over a few ids is valid input and must walk
+    the same trajectories as the ranked path, duplicates included."""
+    from usearch_spark.plans.walks import PRUNED_MAX_STARTS, random_walks
+
+    e = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "b")], "src string, dst string"
+    )
+    starts = spark.range(PRUNED_MAX_STARTS + 5).select(
+        F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("c")), (F.col("id") % 3 + 1).cast("int")).alias("id")
+    )
+
+    def key(df):
+        return sorted((r["start"], r["step"], r["node"]) for r in df.collect())
+
+    pruned = key(random_walks(e, starts, steps=3, strategy="pruned"))
+    assert pruned == key(random_walks(e, starts, steps=3, strategy="ranked"))
+    assert len(pruned) == 4 * (PRUNED_MAX_STARTS + 5)  # no dead ends: every walk runs 3 steps

@@ -4,7 +4,8 @@ link-graph + full-text index + PageRank), re-expressed Spark-first.
 
 Layout:
   session     - SparkSession builder tuned for local[N] and cluster use
-  schema      - canonical StructTypes (links, edges, documents, payloads)
+  schema      - the data model map (links, edges, documents, payloads)
+                and the testdata table list
   sources     - testdata loaders + DataFrame-backed graph/index stores
   functions   - scalar/text functions (tokenize, URL, extraction, analysis)
   operators   - search (postings/BM25/phrase/pagination), dedup, similarity,

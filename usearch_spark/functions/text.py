@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 # ES/bleve default analyzers.
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
-TITLE_RE = "(?i)<title[^>]*>(.*?)</title>"
-
 
 def tokenize(col: Column | str) -> Column:
     """String column -> array<string> of lowercase tokens (no empties).

@@ -93,20 +93,6 @@ def _hostname(url: str) -> str:
         return ""
 
 
-def is_private_host(hostname: str, detector=None) -> bool:
-    """Private-network check via the CIDR detector (functions/privnet.py,
-    reference crawler/privnet/detector.go semantics).  With no detector
-    given, the pipeline default applies: IP literals and localhost are
-    classified against the reference CIDR list, other hostnames pass as
-    public (no DNS in this environment; inject
-    ``PrivateNetworkDetector(resolver=dns_resolver)`` for full parity)."""
-    from usearch_spark.functions.privnet import default_pipeline_detector
-
-    if detector is None:
-        detector = default_pipeline_detector()
-    return detector.is_private(hostname)
-
-
 def _keep_batch_fn(detector):
     """shouldRetainURL (link_extractor.go:120-144): http/https only; same
     host always kept; foreign hosts checked against the private-network

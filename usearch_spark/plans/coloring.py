@@ -21,6 +21,8 @@ JVM-side.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,6 +30,8 @@ from usearch_spark.plans.iterative import (
     LOCAL_SOLVE_MAX_ROWS,
     IterationResult,
     checkpoint_with_metrics,
+    known_edges,
+    local_graph_fixpoint,
     loop_tuned_session,
     release_local_checkpoint,
     run_fixpoint,
@@ -76,139 +80,58 @@ def color_graph(
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        return _coloring_local(spark, state, e0, max_steps)
+        return local_graph_fixpoint(state, e0, partial(_coloring_kernel, max_steps=max_steps), "color int")
     # partitions sized by the dominant per-step volume (mirrored edges)
     with loop_tuned_session(spark, max(n, n_edges)) as n_part:
         return _coloring_loop(spark, state, e0, max_steps, n_part)
 
 
-def _coloring_local(spark, state, e0, max_steps) -> IterationResult:
+def _coloring_kernel(ids, src, dst, cols, max_steps):
     """Single-task greedy token coloring — the identical per-round winner
     rule as _coloring_loop ((token, id) strictly greatest among uncolored
     neighbors takes the least free color), one Spark job for the whole
-    loop.  ``state`` already carries (id, color, token) so the tokens are
+    loop.  The vertex payload carries (color, token) so the tokens are
     bit-identical to the distributed path's."""
-    id_type = dict(state.dtypes)["id"]
-    payload = state.select(
-        F.col("id").alias("a"),
-        F.lit(None).cast(id_type).alias("b"),
-        F.col("color").alias("pre"),
-        F.col("token"),
-    ).unionByName(
-        e0.select(
-            F.col("src").cast(id_type).alias("a"),
-            F.col("dst").cast(id_type).alias("b"),
-            F.lit(None).cast("int").alias("pre"),
-            F.lit(None).cast("string").alias("token"),
-        )
-    )
+    import numpy as np
+    import pandas as pd
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-            {"a": [], "b": [], "pre": [], "token": []}
-        )
-        is_edge = df["b"].notna()
-        verts = df.loc[~is_edge]
-        vids = verts["a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        colors = verts["pre"].to_numpy().astype("int64")
-        tokens = verts["token"].to_numpy()
-        idx = pd.Series(np.arange(nv), index=vids)
-        # nullable columns coerce integral ids to float64 in pandas
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        known = ~(np.isnan(src_f) | np.isnan(dst_f))
-        src = src_f[known].astype("int64")
-        dst = dst_f[known].astype("int64")
-
-        uncolored_hist: list[int] = []
-        steps = 0
-        converged = False
-        for _ in range(max_steps):
-            unc = colors == 0
-            nbr = pd.DataFrame({"d": dst, "ncolor": colors[src], "ns": src})
-            used_by = {
-                d: set(g[g > 0]) for d, g in nbr.groupby("d")["ncolor"]
-            }
-            # strongest uncolored neighbor per vertex as a (token, id) pair
-            unc_nbr = nbr[unc[nbr["ns"].to_numpy()]]
-            max_unc = {
-                d: max((tokens[s], vids[s]) for s in g)
-                for d, g in unc_nbr.groupby("d")["ns"]
-            }
-            new_colors = colors.copy()
-            for vi in np.nonzero(unc)[0]:
-                mu = max_unc.get(vi)
-                if mu is None or (tokens[vi], vids[vi]) > mu:
-                    used = used_by.get(vi, set())
-                    c = 1
-                    while c in used:
-                        c += 1
-                    new_colors[vi] = c
-            colors = new_colors
-            steps += 1
-            remaining = int((colors == 0).sum())
-            uncolored_hist.append(remaining)
-            if remaining == 0:
-                converged = True
-                break
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame(
-            {
-                "id": vids,
-                "color": colors.astype("int32"),
-                "steps": np.int32(steps),
-                "converged": converged,
-                "hist": [uncolored_hist] + [None] * (nv - 1),
-            }
-        )
-
-    out = payload.coalesce(1).mapInPandas(
-        solve, schema=f"id {id_type}, color int, steps int, converged boolean, hist array<long>"
-    ).localCheckpoint(eager=True)
-    meta = out.select("steps", "converged", "hist").first()
-    if meta is None:  # empty vertex set -> solver yielded no rows
-        return IterationResult(state=out.drop("steps", "converged", "hist"), steps=0, converged=True, history=[])
-    history = [{"uncolored": int(u)} for u in (meta["hist"] or [])]
-    return IterationResult(
-        state=out.select("id", "color"),
-        steps=int(meta["steps"]),
-        converged=bool(meta["converged"]),
-        history=history,
-    )
+    colors = cols["color"].astype("int64")
+    tokens = cols["token"]
+    src, dst, _ = known_edges(src, dst)
+    uncolored_hist: list[dict] = []
+    converged = False
+    for _ in range(max_steps):
+        unc = colors == 0
+        nbr = pd.DataFrame({"d": dst, "ncolor": colors[src], "ns": src})
+        used_by = {
+            d: set(g[g > 0]) for d, g in nbr.groupby("d")["ncolor"]
+        }
+        # strongest uncolored neighbor per vertex as a (token, id) pair
+        unc_nbr = nbr[unc[nbr["ns"].to_numpy()]]
+        max_unc = {
+            d: max((tokens[s], ids[s]) for s in g)
+            for d, g in unc_nbr.groupby("d")["ns"]
+        }
+        new_colors = colors.copy()
+        for vi in np.nonzero(unc)[0]:
+            mu = max_unc.get(vi)
+            if mu is None or (tokens[vi], ids[vi]) > mu:
+                used = used_by.get(vi, set())
+                c = 1
+                while c in used:
+                    c += 1
+                new_colors[vi] = c
+        colors = new_colors
+        remaining = int((colors == 0).sum())
+        uncolored_hist.append({"uncolored": remaining})
+        if remaining == 0:
+            converged = True
+            break
+    return {
+        "color": colors.astype("int32"),
+        "converged": converged,
+        "history": uncolored_hist,
+    }
 
 
 def _coloring_loop(spark, state, e0, max_steps, n_part) -> IterationResult:

@@ -22,10 +22,17 @@ Scale notes:
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from usearch_spark.plans.iterative import release_local_checkpoint
+from usearch_spark.plans.iterative import (
+    known_edges,
+    local_graph_solve,
+    local_task,
+    release_local_checkpoint,
+)
 
 
 def degree_distribution(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -204,7 +211,7 @@ def kcore_peel(
     return alive.join(deg, "id", "inner").select("id", "core_degree")
 
 
-def _coreness_local(e: DataFrame, rounds: int, id_type: str) -> DataFrame:
+def _coreness_task(pdf, rounds):
     """Single-task numpy mirror of the h-index iteration: the doubled
     edge list ships once through Arrow, one task runs every round, and
     the per-endpoint (id, val) frame comes back (the final left join
@@ -214,67 +221,40 @@ def _coreness_local(e: DataFrame, rounds: int, id_type: str) -> DataFrame:
     construction, including the unchanged-total early exit (h is
     monotone non-increasing, so a stable total is a fixpoint and the
     early exit returns exactly the fixed-round result)."""
+    import numpy as np
+    import pandas as pd
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): malloc heap reuse + cyclic gc paused for the body,
-        # ONE sweep in the epilogue after the big frames are dropped
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"a": [], "b": []})
-        )
-        if df.empty:
-            _gc.enable()
-            return
-        # factorize both endpoint columns against ONE id universe
-        codes, ids = pd.factorize(pd.concat([df["a"], df["b"]], ignore_index=True))
-        m = len(df)
-        ai, bi = codes[:m], codes[m:]
-        n = len(ids)
-        # group edges by a once — the CSR layout is round-invariant
-        order = np.argsort(ai, kind="stable")
-        ai_s, bi_s = ai[order], bi[order]
-        counts = np.bincount(ai_s, minlength=n)
-        # every id appears as `a` in the doubled edge set, so every group
-        # is non-empty and reduceat over the starts covers all n vertices
-        starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        h = counts.astype("int64")  # h0 = degree
-        total = int(h.sum())
-        big = np.int64(m + 1)  # > any h value; composite sort key base
-        rn_base = np.arange(m, dtype="int64") - np.repeat(starts, counts) + 1
-        for _ in range(rounds):
-            vals = h[bi_s]
-            # per-group DESC value order via one composite argsort
-            ord2 = np.argsort(ai_s * big + (big - 1 - vals), kind="stable")
-            vals_sorted = vals[ord2]
-            # rn restarts at 1 per group (ord2 keeps groups contiguous)
-            cand = np.where(vals_sorted >= rn_base, rn_base, 0)
-            h = np.maximum.reduceat(cand, starts)
-            t_next = int(h.sum())
-            if t_next == total:
-                break  # monotone non-increasing: unchanged total = fixpoint
-            total = t_next
-        out = pd.DataFrame({"id": ids, "val": h.astype("int32")})
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield out
-
-    return e.coalesce(1).mapInPandas(solve, schema=f"id {id_type}, val int")
+    if pdf.empty:
+        return None
+    # factorize both endpoint columns against ONE id universe
+    codes, ids = pd.factorize(pd.concat([pdf["a"], pdf["b"]], ignore_index=True))
+    m = len(pdf)
+    ai, bi = codes[:m], codes[m:]
+    n = len(ids)
+    # group edges by a once — the CSR layout is round-invariant
+    order = np.argsort(ai, kind="stable")
+    ai_s, bi_s = ai[order], bi[order]
+    counts = np.bincount(ai_s, minlength=n)
+    # every id appears as `a` in the doubled edge set, so every group
+    # is non-empty and reduceat over the starts covers all n vertices
+    starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
+    h = counts.astype("int64")  # h0 = degree
+    total = int(h.sum())
+    big = np.int64(m + 1)  # > any h value; composite sort key base
+    rn_base = np.arange(m, dtype="int64") - np.repeat(starts, counts) + 1
+    for _ in range(rounds):
+        vals = h[bi_s]
+        # per-group DESC value order via one composite argsort
+        ord2 = np.argsort(ai_s * big + (big - 1 - vals), kind="stable")
+        vals_sorted = vals[ord2]
+        # rn restarts at 1 per group (ord2 keeps groups contiguous)
+        cand = np.where(vals_sorted >= rn_base, rn_base, 0)
+        h = np.maximum.reduceat(cand, starts)
+        t_next = int(h.sum())
+        if t_next == total:
+            break  # monotone non-increasing: unchanged total = fixpoint
+        total = t_next
+    return pd.DataFrame({"id": ids, "val": h.astype("int32")})
 
 
 def coreness(
@@ -334,7 +314,7 @@ def coreness(
         strategy = "local" if n_rows <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
         id_type = dict(e.dtypes)["a"]
-        h_local = _coreness_local(e, rounds, id_type)
+        h_local = local_task(e, partial(_coreness_task, rounds=rounds), f"id {id_type}, val int")
         return v.join(h_local, "id", "left").select(
             "id", F.coalesce(F.col("val"), F.lit(0)).alias("coreness")
         )
@@ -1173,155 +1153,21 @@ def triangles_per_vertex(
     )
 
 
-def _local_bfs_frame(
-    vertices, e, sources: list, rounds: int, mode: str, undirected: bool = False
-) -> DataFrame:
+def _local_bfs_frame(vertices, e, sources: list, rounds: int, mode: str) -> DataFrame:
     """Single-task numpy solve for the sampled-source BFS family — the same
     adaptive escape hatch as pagerank's local strategy: below
     LOCAL_SOLVE_MAX_ROWS the per-round scheduling floor dwarfs the math, so
     vertices+edges stream through ONE mapInPandas task that runs the
     identical rounds-bounded recurrence (harmonic sums or Brandes
-    sigma/delta sweeps) with array ops.  ``e`` is the both-directions edge
-    list, or — with ``undirected=True`` — the CANONICAL (a < b) list, which
-    the solver mirrors in numpy after transfer: half the Arrow volume for
-    the same adjacency (measured ~25% off the sf0.1 harmonic wall clock).
-    Output schema matches the distributed path exactly (parity pinned in
-    tests)."""
-    id_type = dict(vertices.dtypes)[vertices.columns[0]]
-    payload = vertices.select(
-        F.col(vertices.columns[0]).alias("a"), F.lit(None).cast(id_type).alias("b")
-    ).unionByName(e.select(F.col("a"), F.col("b")))
-    srcs = list(sources)
-
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({"a": [], "b": []})
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        known = ~np.isnan(src_f) & ~np.isnan(dst_f)
-        es = src_f[known].astype("int64")
-        ed = dst_f[known].astype("int64")
-        if undirected:
-            # canonical edges arrive once; mirror them here (same rows the
-            # JVM-side unionAll would have shipped, at half the transfer)
-            es, ed = np.concatenate([es, ed]), np.concatenate([ed, es])
-        # CSR adjacency
-        order = np.argsort(es, kind="stable")
-        es, ed = es[order], ed[order]
-        ptr = np.zeros(nv + 1, dtype="int64")
-        np.add.at(ptr, es + 1, 1)
-        ptr = np.cumsum(ptr)
-
-        def edge_ranges(nodes):
-            """Concatenated CSR edge indices of ``nodes`` — the ragged
-            np.repeat trick, no per-node Python loop (r5 verdict nit)."""
-            counts = ptr[nodes + 1] - ptr[nodes]
-            total = int(counts.sum())
-            if total == 0:
-                return np.array([], dtype="int64")
-            starts = np.repeat(ptr[nodes], counts)
-            offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-            return starts + offs
-
-        hnum = np.zeros(nv, dtype="int64")  # Σ L/d — exact integer units
-        reached = np.zeros(nv, dtype="int64")
-        bc = np.zeros(nv)
-        for s in srcs:
-            if s not in idx.index:
-                continue
-            s_i = int(idx[s])
-            dist = np.full(nv, -1, dtype="int64")
-            sigma = np.zeros(nv)
-            dist[s_i] = 0
-            sigma[s_i] = 1.0
-            frontier = np.array([s_i], dtype="int64")
-            levels = [frontier]
-            for lev in range(1, rounds + 1):
-                # neighbors of the frontier, with per-edge sigma credit
-                eidx = edge_ranges(frontier)
-                if len(eidx) == 0:
-                    levels.append(np.array([], dtype="int64"))
-                    continue
-                nbr = ed[eidx]
-                srcs_of = es[eidx]
-                fresh_mask = dist[nbr] == -1
-                newly = np.unique(nbr[fresh_mask])
-                # sigma: sum over edges from dist==lev-1 into each new node
-                # (nbr[i] in newly <=> fresh_mask[i] — dist hasn't been
-                # updated yet — so no np.isin sort pass is needed)
-                useful = (dist[srcs_of] == lev - 1) & fresh_mask
-                np.add.at(sigma, nbr[useful], sigma[srcs_of[useful]])
-                dist[newly] = lev
-                frontier = newly
-                levels.append(newly)
-            hit = dist > 0
-            hnum[hit] += lcm_val // dist[hit]
-            reached += hit.astype("int64")
-            if mode == "betweenness":
-                delta = np.zeros(nv)
-                for lev in range(rounds, 0, -1):
-                    w_nodes = levels[lev] if lev < len(levels) else np.array([], dtype="int64")
-                    if len(w_nodes) == 0:
-                        continue
-                    eidx = edge_ranges(w_nodes)
-                    w_of = es[eidx]
-                    p_of = ed[eidx]
-                    pred = dist[p_of] == lev - 1
-                    contrib = sigma[p_of[pred]] / sigma[w_of[pred]] * (1.0 + delta[w_of[pred]])
-                    np.add.at(delta, p_of[pred], contrib)
-                mask = np.ones(nv, dtype=bool)
-                mask[s_i] = False
-                bc[mask] += delta[mask]
-        if mode == "harmonic":
-            out = pd.DataFrame({"id": vids, "hnum": hnum, "n_reached": reached})
-        else:
-            out = pd.DataFrame({"id": vids, "betweenness": bc * 0.5})
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield out
-
+    sigma/delta sweeps) with array ops.  ``e`` is the CANONICAL (a < b)
+    edge list, which the kernel mirrors in numpy after transfer: half the
+    Arrow volume for the same adjacency (measured ~25% off the sf0.1
+    harmonic wall clock).  Output schema matches the distributed path
+    exactly (parity pinned in tests)."""
     lcm_val = _lcm_upto(rounds)
-    schema = (
-        f"id {id_type}, hnum long, n_reached long"
-        if mode == "harmonic"
-        else f"id {id_type}, betweenness double"
-    )
-    raw = payload.coalesce(1).mapInPandas(solve, schema=schema).localCheckpoint(eager=True)
+    kernel = partial(_bfs_kernel, sources=list(sources), rounds=rounds, mode=mode, lcm_val=lcm_val)
+    schema = "hnum long, n_reached long" if mode == "harmonic" else "betweenness double"
+    raw = local_graph_solve(vertices, e.select(F.col("a").alias("src"), F.col("b").alias("dst")), kernel, schema)
     if mode == "harmonic":
         # same exact fixed-point quantization as the distributed path —
         # the numpy pass only accumulates the integer Σ lcm/d numerator
@@ -1333,6 +1179,91 @@ def _local_bfs_frame(
     # round in Spark, not numpy: np.round is half-even while F.round is
     # half-up — the distributed path and the SQL oracles use the latter
     return raw.select("id", F.round("betweenness", 6).alias("betweenness"))
+
+
+def _bfs_kernel(ids, src, dst, cols, sources, rounds, mode, lcm_val):
+    """Rounds-bounded BFS from every source over the mirrored canonical
+    edges: the integer harmonic numerator Σ lcm/d and reach count, or
+    the Brandes betweenness sweeps (the kernel of :func:`_local_bfs_frame`)."""
+    import numpy as np
+    import pandas as pd
+
+    nv = len(ids)
+    es, ed, _ = known_edges(src, dst)
+    # canonical edges arrive once; mirror them here (same rows the
+    # JVM-side unionAll would have shipped, at half the transfer)
+    es, ed = np.concatenate([es, ed]), np.concatenate([ed, es])
+    # CSR adjacency
+    order = np.argsort(es, kind="stable")
+    es, ed = es[order], ed[order]
+    ptr = np.zeros(nv + 1, dtype="int64")
+    np.add.at(ptr, es + 1, 1)
+    ptr = np.cumsum(ptr)
+
+    def edge_ranges(nodes):
+        """Concatenated CSR edge indices of ``nodes`` — the ragged
+        np.repeat trick, no per-node Python loop (r5 verdict nit)."""
+        counts = ptr[nodes + 1] - ptr[nodes]
+        total = int(counts.sum())
+        if total == 0:
+            return np.array([], dtype="int64")
+        starts = np.repeat(ptr[nodes], counts)
+        offs = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
+        return starts + offs
+
+    idx = pd.Index(ids)
+    hnum = np.zeros(nv, dtype="int64")  # Σ L/d — exact integer units
+    reached = np.zeros(nv, dtype="int64")
+    bc = np.zeros(nv)
+    for s in sources:
+        if s not in idx:
+            continue
+        s_i = idx.get_loc(s)
+        dist = np.full(nv, -1, dtype="int64")
+        sigma = np.zeros(nv)
+        dist[s_i] = 0
+        sigma[s_i] = 1.0
+        frontier = np.array([s_i], dtype="int64")
+        levels = [frontier]
+        for lev in range(1, rounds + 1):
+            # neighbors of the frontier, with per-edge sigma credit
+            eidx = edge_ranges(frontier)
+            if len(eidx) == 0:
+                levels.append(np.array([], dtype="int64"))
+                continue
+            nbr = ed[eidx]
+            srcs_of = es[eidx]
+            fresh_mask = dist[nbr] == -1
+            newly = np.unique(nbr[fresh_mask])
+            # sigma: sum over edges from dist==lev-1 into each new node
+            # (nbr[i] in newly <=> fresh_mask[i] — dist hasn't been
+            # updated yet — so no np.isin sort pass is needed)
+            useful = (dist[srcs_of] == lev - 1) & fresh_mask
+            np.add.at(sigma, nbr[useful], sigma[srcs_of[useful]])
+            dist[newly] = lev
+            frontier = newly
+            levels.append(newly)
+        hit = dist > 0
+        hnum[hit] += lcm_val // dist[hit]
+        reached += hit.astype("int64")
+        if mode == "betweenness":
+            delta = np.zeros(nv)
+            for lev in range(rounds, 0, -1):
+                w_nodes = levels[lev] if lev < len(levels) else np.array([], dtype="int64")
+                if len(w_nodes) == 0:
+                    continue
+                eidx = edge_ranges(w_nodes)
+                w_of = es[eidx]
+                p_of = ed[eidx]
+                pred = dist[p_of] == lev - 1
+                contrib = sigma[p_of[pred]] / sigma[w_of[pred]] * (1.0 + delta[w_of[pred]])
+                np.add.at(delta, p_of[pred], contrib)
+            mask = np.ones(nv, dtype=bool)
+            mask[s_i] = False
+            bc[mask] += delta[mask]
+    if mode == "harmonic":
+        return {"hnum": hnum, "n_reached": reached}
+    return {"betweenness": bc * 0.5}
 
 
 def _lcm_upto(n: int) -> int:
@@ -1399,7 +1330,7 @@ def harmonic_centrality(
         strategy = "local" if n_rows <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
         # ship the canonical half; the solver mirrors it after transfer
-        return _local_bfs_frame(v, und, sources, rounds, "harmonic", undirected=True)
+        return _local_bfs_frame(v, und, sources, rounds, "harmonic")
     spark = vertices.sparkSession
     # state id columns take the VERTEX frame's id type (bigint vertex ids
     # must not silently coerce to string — join/union coercion can lose
@@ -1497,7 +1428,7 @@ def betweenness_centrality(
         strategy = "local" if n_rows <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
         # ship the canonical half; the solver mirrors it after transfer
-        return _local_bfs_frame(v_in, und, sources, rounds, "betweenness", undirected=True)
+        return _local_bfs_frame(v_in, und, sources, rounds, "betweenness")
     spark = vertices.sparkSession
     id_type = dict(v_in.dtypes)["id"]
     state = spark.createDataFrame(
@@ -2463,7 +2394,7 @@ def katz_centrality(
             else "distributed"
         )
     if strategy == "local":
-        return _katz_local(v, e, beta, steps)
+        return local_graph_solve(v, e, partial(_katz_kernel, beta=beta, steps=steps), "score double")
     x = v.withColumn("score", F.lit(1.0))
     prev = None
     for _ in range(steps):
@@ -2487,81 +2418,22 @@ def katz_centrality(
     return x
 
 
-def _katz_local(v: DataFrame, e: DataFrame, beta: float, steps: int) -> DataFrame:
-    """Single-task Katz solve (the pagerank/_sssp local pattern): vertices
-    and edges stream through one mapInPandas task; each step is a numpy
-    bincount mat-vec of the identical recurrence.  Below
+def _katz_kernel(ids, src, dst, cols, beta, steps):
+    """Single-task Katz solve (the pagerank/_sssp local pattern): each
+    step is a numpy bincount mat-vec of the identical recurrence.  Below
     LOCAL_SOLVE_MAX_ROWS the per-superstep job floor dwarfs the math —
     measured ~1.5x faster than the 10-superstep distributed loop on the
     1.2M-edge sf0.1 graph (the solve itself is ~half the wall clock; the
-    string-id reindex dominates the rest, same as _pagerank_local);
-    above the threshold the distributed loop is the only path that
-    scales.
+    string-id reindex dominates the rest, same as pagerank's local
+    solve); above the threshold the distributed loop is the only path
+    that scales.
     Float parity with the distributed loop is the PageRank-local class
     (per-dst sum order differs in ulps; callers round, 8dp gate-proven)."""
-    id_type = dict(v.dtypes)["id"]
-    payload = v.select(
-        F.col("id").alias("a"), F.lit(None).cast(id_type).alias("b")
-    ).unionByName(
-        e.select(F.col("src").cast(id_type).alias("a"), F.col("dst").cast(id_type).alias("b"))
-    )
+    import numpy as np
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"a": [], "b": []})
-        )
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        known = ~(np.isnan(src_f) | np.isnan(dst_f))
-        src = src_f[known].astype("int64")
-        dst = dst_f[known].astype("int64")
-        x = np.ones(nv, dtype="float64")
-        for _ in range(steps):
-            msg = np.bincount(dst, weights=x[src], minlength=nv)
-            x = 1.0 + beta * msg
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame({"id": vids, "score": x})
-
-    one = payload.coalesce(1)
-    return one.mapInPandas(
-        solve, schema=f"id {id_type}, score double"
-    ).localCheckpoint(eager=True)
+    src, dst, _ = known_edges(src, dst)
+    x = np.ones(len(ids), dtype="float64")
+    for _ in range(steps):
+        msg = np.bincount(dst, weights=x[src], minlength=len(ids))
+        x = 1.0 + beta * msg
+    return {"score": x}

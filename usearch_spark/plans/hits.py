@@ -16,6 +16,8 @@ side and authorities on the target side — the classic use.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,6 +25,8 @@ from usearch_spark.plans.iterative import (
     LOCAL_SOLVE_MAX_ROWS,
     IterationResult,
     checkpoint_with_metrics,
+    known_edges,
+    local_graph_solve,
     loop_tuned_session,
     run_fixpoint,
 )
@@ -58,80 +62,31 @@ def hits(
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        return _hits_local(v, n, e0, rounds)
+        out = local_graph_solve(v, e0, partial(_hits_kernel, rounds=rounds), "hub double, authority double")
+        return IterationResult(state=out, steps=rounds, converged=True, history=[])
     with loop_tuned_session(spark, max(n, n_edges)) as n_part:
         return _hits_loop(v, n, e0, rounds, n_part)
 
 
-def _hits_local(v, n, e0, rounds) -> IterationResult:
-    id_type = dict(v.dtypes)["id"]
-    payload = v.select(F.col("id").alias("a"), F.lit(None).cast(id_type).alias("b")).unionByName(
-        e0.select(F.col("src").cast(id_type).alias("a"), F.col("dst").cast(id_type).alias("b"))
-    )
+def _hits_kernel(ids, src, dst, cols, rounds):
+    """``rounds`` HITS rounds as numpy bincount mat-vecs (the local
+    strategy's single-task kernel)."""
+    import numpy as np
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({"a": [], "b": []})
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        known = ~(np.isnan(src_f) | np.isnan(dst_f))
-        src = src_f[known].astype("int64")
-        dst = dst_f[known].astype("int64")
-
-        hub = np.full(nv, 1.0 / nv)
-        auth = np.full(nv, 1.0 / nv)
-        for _ in range(rounds):
-            auth = np.bincount(dst, weights=hub[src], minlength=nv)
-            s = auth.sum()
-            if s > 0:
-                auth = auth / s
-            hub = np.bincount(src, weights=auth[dst], minlength=nv)
-            s = hub.sum()
-            if s > 0:
-                hub = hub / s
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame({"id": vids, "hub": hub, "authority": auth})
-
-    out = payload.coalesce(1).mapInPandas(
-        solve, schema=f"id {id_type}, hub double, authority double"
-    ).localCheckpoint(eager=True)
-    return IterationResult(state=out, steps=rounds, converged=True, history=[])
+    nv = len(ids)
+    src, dst, _ = known_edges(src, dst)
+    hub = np.full(nv, 1.0 / nv)
+    auth = np.full(nv, 1.0 / nv)
+    for _ in range(rounds):
+        auth = np.bincount(dst, weights=hub[src], minlength=nv)
+        s = auth.sum()
+        if s > 0:
+            auth = auth / s
+        hub = np.bincount(src, weights=auth[dst], minlength=nv)
+        s = hub.sum()
+        if s > 0:
+            hub = hub / s
+    return {"hub": hub, "authority": auth}
 
 
 def _hits_loop(v, n, e0, rounds, n_part) -> IterationResult:

@@ -12,18 +12,32 @@ Catalyst cannot express iteration, so the engine owns this driver loop:
   - convergence is a driver-side predicate over per-step aggregates
     (ShouldRunAnotherStep).
 
-At cluster scale, ``reliable_checkpoint`` should point at a fault-tolerant
-checkpoint dir; localCheckpoint trades re-computability for speed, which is
-the right default for iterative analytics that can simply rerun.
+Below ``LOCAL_SOLVE_MAX_ROWS`` the graph families skip the loop and run
+the whole recurrence in ONE task: ``local_graph_solve`` (and its
+IterationResult form ``local_graph_fixpoint``) ships vertices + edges
+through a single mapInPandas task into a pure-numpy kernel; ``local_task``
+is the same single-task worker for solves that ship a frame of their own.
+
+localCheckpoint trades re-computability for speed: its blocks live only
+on the executor that wrote them, so losing that executor fails the next
+read.  That is the right default for iterative analytics that can simply
+rerun; a cluster deployment that must survive executor loss needs a
+reliable ``df.checkpoint()`` to ``spark.checkpoint.dir`` instead.
 """
 
 from __future__ import annotations
 
+import gc
+import json
 from collections.abc import Callable
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+from usearch_spark.session import _keep_malloc_heap, ship_package
 
 # Graphs at or below this many rows (|V|+|E|) run their iterative loops as
 # a single-task numpy solve inside mapInPandas (strategy="auto" in the
@@ -235,3 +249,140 @@ def run_fixpoint(
             converged = True
             break
     return IterationResult(state=current, steps=steps, converged=converged, history=history)
+
+
+def _single_task_worker(solve, columns, batches):
+    """mapInPandas body of every single-task solve: concat the task's
+    batches, run ``solve(pdf) -> pandas.DataFrame | None`` and yield its
+    result (``None``: nothing to yield).
+
+    Heap policy (see ``session.udf_worker_prelude`` for the measured
+    pathology): malloc keeps large numpy temporaries on a reused heap
+    instead of re-faulting fresh pages every task, and cyclic gc is paused
+    for the body — threshold sweeps would re-trace the millions of
+    surviving row objects — then paid as ONE sweep after the big frames
+    are dropped.
+    """
+    import pandas as pd
+
+    _keep_malloc_heap()
+    gc.disable()
+    parts = list(batches)
+    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({c: [] for c in columns})
+    out = solve(pdf)
+    if out is None:
+        gc.enable()  # early exit: re-arm cyclic gc for the worker
+        return
+    del pdf, parts
+    gc.enable()
+    gc.collect()
+    yield out
+
+
+def local_task(df: DataFrame, solve: Callable, schema: str) -> DataFrame:
+    """All of ``df`` through ONE lazy mapInPandas task running
+    ``solve(pdf) -> pandas.DataFrame | None`` under the single-task heap
+    policy.  ``solve`` must be a module-level function (or a
+    ``functools.partial`` of one): it is pickled by reference, so the
+    package is shipped to the workers first."""
+    ship_package(df.sparkSession)
+    return df.coalesce(1).mapInPandas(partial(_single_task_worker, solve, df.columns), schema=schema)
+
+
+def index_edges(ids, a, b):
+    """Vertex-index arrays for edge endpoints ``a``/``b`` against the
+    vertex ids ``ids`` (unique): float arrays with NaN where an endpoint is
+    not a vertex (int arrays when every endpoint is)."""
+    import numpy as np
+    import pandas as pd
+
+    idx = pd.Series(np.arange(len(ids)), index=ids)
+    # nullable columns coerce integral ids to float64 in pandas — bring
+    # edge endpoints back to the vertex dtype before the index lookup
+    if a.dtype != ids.dtype:
+        a = a.astype(ids.dtype)
+    if b.dtype != ids.dtype:
+        b = b.astype(ids.dtype)
+    return idx.reindex(a).to_numpy(), idx.reindex(b).to_numpy()
+
+
+def known_edges(src, dst):
+    """The edges whose endpoints are both vertices, as int64 index arrays,
+    plus the mask that selects them (for per-edge payload columns)."""
+    import numpy as np
+
+    known = ~(np.isnan(src) | np.isnan(dst))
+    return src[known].astype("int64"), dst[known].astype("int64"), known
+
+
+def _graph_task(kernel, vcols, ecols, pdf):
+    """Split the (a, b, payload...) union back into vertices (b null) and
+    edges, index the edges, and run the kernel; an empty vertex set yields
+    nothing."""
+    import pandas as pd
+
+    is_edge = pdf["b"].notna()
+    ids = pdf.loc[~is_edge, "a"].to_numpy()
+    if len(ids) == 0:
+        return None
+    src, dst = index_edges(ids, pdf.loc[is_edge, "a"], pdf.loc[is_edge, "b"])
+    cols = {c: pdf.loc[~is_edge, c].to_numpy() for c in vcols}
+    cols.update({c: pdf.loc[is_edge, c].to_numpy() for c in ecols})
+    out = kernel(ids, src, dst, cols)
+    if "history" in out:
+        # fixpoint side channel: ``converged`` is a constant column, the
+        # history rides row 0 only (a per-step list on every vertex row
+        # would be O(|V|*steps) dead weight)
+        out["history"] = [json.dumps(out["history"])] + [None] * (len(ids) - 1)
+    return pd.DataFrame({"id": ids, **out})
+
+
+def local_graph_solve(v: DataFrame, e: DataFrame, kernel: Callable, schema: str) -> DataFrame:
+    """Single-task solve of a graph small enough for one task: vertices
+    (``id`` + payload columns) and edges (``src``, ``dst`` + payload
+    columns) stream through ONE mapInPandas task into the pure-numpy
+    ``kernel(ids, src, dst, cols) -> {column: values}``, and ONE Spark job
+    materializes the eager-checkpointed (id, *schema) result.
+
+    Kernel inputs: ``ids`` the vertex ids in arrival order; ``src``/``dst``
+    per-edge vertex indexes from :func:`index_edges` (NaN for an endpoint
+    outside the vertex set — :func:`known_edges` drops those); ``cols``
+    the payload columns by name, vertex columns aligned with ``ids`` and
+    edge columns with ``src``.  It returns one value (or array) per output
+    column of ``schema``, which names every column but ``id``.  A
+    ``kernel`` must be module-level (see :func:`local_task`).
+    """
+    id_type = dict(v.dtypes)["id"]
+    vcols = [c for c in v.columns if c != "id"]
+    ecols = [c for c in e.columns if c not in ("src", "dst")]
+    types = {**dict(v.dtypes), **dict(e.dtypes)}
+
+    def nulls(cols):
+        return [F.lit(None).cast(types[c]).alias(c) for c in cols]
+
+    payload = v.select(
+        F.col("id").alias("a"), F.lit(None).cast(id_type).alias("b"), *vcols, *nulls(ecols)
+    ).unionByName(
+        e.select(
+            F.col("src").cast(id_type).alias("a"),
+            F.col("dst").cast(id_type).alias("b"),
+            *nulls(vcols),
+            *ecols,
+        )
+    )
+    task = partial(_graph_task, kernel, vcols, ecols)
+    return local_task(payload, task, f"id {id_type}, {schema}").localCheckpoint(eager=True)
+
+
+def local_graph_fixpoint(v: DataFrame, e: DataFrame, kernel: Callable, schema: str) -> IterationResult:
+    """:func:`local_graph_solve` for an iterating kernel, as an
+    IterationResult: the kernel's output also carries ``converged`` and
+    ``history`` (one metric dict per step run), which come back on the
+    checkpointed result and are read from its first row."""
+    out = local_graph_solve(v, e, kernel, f"{schema}, converged boolean, history string")
+    meta = out.select("converged", "history").first()
+    state = out.drop("converged", "history")
+    if meta is None:  # empty vertex set -> the kernel never ran
+        return IterationResult(state=state, steps=0, converged=True, history=[])
+    history = json.loads(meta["history"])
+    return IterationResult(state=state, steps=len(history), converged=bool(meta["converged"]), history=history)

@@ -119,10 +119,3 @@ def lint_plan(df: DataFrame) -> list[dict]:
 def errors(findings: list[dict]) -> list[dict]:
     return [f for f in findings if f["level"] == ERROR]
 
-
-def lint_report(df: DataFrame) -> str:
-    """Human-readable lint summary for one DataFrame's plan."""
-    fs = lint_plan(df)
-    if not fs:
-        return "clean"
-    return "\n".join(f"[{f['level'].upper()}] {f['code']}: {f['detail']}" for f in fs)

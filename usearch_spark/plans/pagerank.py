@@ -36,6 +36,9 @@ Two physical strategies behind one API (strategy="auto"):
 
 from __future__ import annotations
 
+import math
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,6 +46,8 @@ from usearch_spark.plans.iterative import (
     LOCAL_SOLVE_MAX_ROWS,
     IterationResult,
     checkpoint_with_metrics,
+    local_graph_fixpoint,
+    local_task,
     loop_tuned_session,
     release_local_checkpoint,
     run_fixpoint,
@@ -120,12 +125,20 @@ def pagerank(
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        return _pagerank_local(spark, v, n, e0, damping, min_sad, max_steps, init=s0)
-    # loop partitions sized by the DOMINANT per-step volume: the ranks⋈edges
-    # join moves |E| rows, usually >> |V| (a vertex-count sizing left a 500k-
-    # edge graph on 2 partitions — 2 tasks on a 32-core box)
-    with loop_tuned_session(spark, max(n, n_edges)) as n_part:
-        return _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=s0)
+        res = _pagerank_local(v, e0, damping, min_sad, max_steps, init=s0)
+    else:
+        # loop partitions sized by the DOMINANT per-step volume: the
+        # ranks⋈edges join moves |E| rows, usually >> |V| (a vertex-count
+        # sizing left a 500k-edge graph on 2 partitions — 2 tasks on a
+        # 32-core box)
+        with loop_tuned_session(spark, max(n, n_edges)) as n_part:
+            res = _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=s0)
+    # the result is its own checkpoint: the input checkpoints taken above
+    # are dead, so free them now rather than at GC time (a re-ranking
+    # stream calls this once per micro-batch)
+    for cp in (v, e0, s0):
+        release_local_checkpoint(cp)
+    return res
 
 
 def personalized_pagerank(
@@ -171,14 +184,12 @@ def personalized_pagerank(
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        return _pagerank_local(
-            spark, v, n, e0, damping, min_sad, max_steps, teleport=p_col
-        )
+        return _pagerank_local(v, e0, damping, min_sad, max_steps, teleport=p_col)
     with loop_tuned_session(spark, max(n, n_edges)) as n_part:
         return _ppr_loop(spark, v, e0, damping, min_sad, max_steps, n_part, p_col)
 
 
-def _ppr_push_local(e, seeds, p_val, d, omd, eps, rounds, id_type):
+def _ppr_push_task(pdf, seeds, p_val, d, omd, eps, rounds):
     """Single-task numpy mirror of the forward-push loop (the katz/harmonic
     local-solve pattern): the deduped edge list ships once through Arrow,
     one task runs all ``rounds`` pushes, and only the touched (id, p, r)
@@ -188,73 +199,40 @@ def _ppr_push_local(e, seeds, p_val, d, omd, eps, rounds, id_type):
     summation-order class the 8dp closing round already absorbs between
     Spark's partial aggs and DuckDB.  Support membership is exact: a
     vertex is touched iff it ever receives a push."""
-    seed_list = list(seeds)
+    import numpy as np
+    import pandas as pd
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = [b for b in batches]
-        df = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"src": [], "dst": []})
-        )
-        src = df["src"].to_numpy()
-        dst = df["dst"].to_numpy()
-        seed_arr = np.asarray(seed_list)
-        if len(src) and seed_arr.dtype != src.dtype:
-            seed_arr = seed_arr.astype(src.dtype)
-        ids, inv = np.unique(np.concatenate([src, dst, seed_arr]), return_inverse=True)
-        ns = len(src)
-        si, di, seed_idx = inv[:ns], inv[ns : 2 * ns], inv[2 * ns :]
-        n = len(ids)
-        od = np.bincount(si, minlength=n).astype("float64")
-        has_out = od > 0
-        p = np.zeros(n)
-        r = np.zeros(n)
-        r[seed_idx] = p_val
-        touched = np.zeros(n, dtype=bool)
-        touched[seed_idx] = True
-        for _ in range(rounds):
-            # dead mass of the CURRENT state (the distributed loop's
-            # checkpoint metric), credited to the seeds this round
-            dead_mass = float(r[(~has_out) & (r > 0.0)].sum())
-            fr = r > eps * od
-            mask = (fr & has_out)[si]
-            add_r = np.zeros(n)
-            if mask.any():
-                np.add.at(add_r, di[mask], d * r[si[mask]] / od[si[mask]])
-                touched[di[mask]] = True
-            seed_add = (d * dead_mass) * p_val
-            p = p + np.where(fr, omd * r, 0.0)
-            r = np.where(fr, 0.0, r) + add_r
-            r[seed_idx] += seed_add
-        out = pd.DataFrame({"id": ids[touched], "p": p[touched], "r": r[touched]})
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield out
-
-    return e.coalesce(1).mapInPandas(solve, schema=f"id {id_type}, p double, r double")
+    src = pdf["src"].to_numpy()
+    dst = pdf["dst"].to_numpy()
+    seed_arr = np.asarray(seeds)
+    if len(src) and seed_arr.dtype != src.dtype:
+        seed_arr = seed_arr.astype(src.dtype)
+    ids, inv = np.unique(np.concatenate([src, dst, seed_arr]), return_inverse=True)
+    ns = len(src)
+    si, di, seed_idx = inv[:ns], inv[ns : 2 * ns], inv[2 * ns :]
+    n = len(ids)
+    od = np.bincount(si, minlength=n).astype("float64")
+    has_out = od > 0
+    p = np.zeros(n)
+    r = np.zeros(n)
+    r[seed_idx] = p_val
+    touched = np.zeros(n, dtype=bool)
+    touched[seed_idx] = True
+    for _ in range(rounds):
+        # dead mass of the CURRENT state (the distributed loop's
+        # checkpoint metric), credited to the seeds this round
+        dead_mass = float(r[(~has_out) & (r > 0.0)].sum())
+        fr = r > eps * od
+        mask = (fr & has_out)[si]
+        add_r = np.zeros(n)
+        if mask.any():
+            np.add.at(add_r, di[mask], d * r[si[mask]] / od[si[mask]])
+            touched[di[mask]] = True
+        seed_add = (d * dead_mass) * p_val
+        p = p + np.where(fr, omd * r, 0.0)
+        r = np.where(fr, 0.0, r) + add_r
+        r[seed_idx] += seed_add
+    return pd.DataFrame({"id": ids[touched], "p": p[touched], "r": r[touched]})
 
 
 def ppr_forward_push(
@@ -331,7 +309,8 @@ def ppr_forward_push(
     if strategy == "auto":
         strategy = "local" if e.count() <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        state = _ppr_push_local(e, seeds, p_val, d, omd, eps, rounds, id_type)
+        push = partial(_ppr_push_task, seeds=seeds, p_val=p_val, d=d, omd=omd, eps=eps, rounds=rounds)
+        state = local_task(e, push, f"id {id_type}, p double, r double")
         return state.select(
             "id",
             F.round("p", 8).alias("score"),
@@ -440,115 +419,41 @@ def weighted_pagerank(
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        return _weighted_pagerank_local(v, n, e0, damping, min_sad, max_steps)
+        kernel = partial(_weighted_pagerank_kernel, d=damping, min_sad=min_sad, max_steps=max_steps)
+        return local_graph_fixpoint(v, e0, kernel, "score double")
     with loop_tuned_session(spark, max(n, n_edges)) as n_part:
         return _weighted_pagerank_loop(v, n, e0, damping, min_sad, max_steps, n_part)
 
 
-def _weighted_pagerank_local(v, n, e0, damping, min_sad, max_steps) -> IterationResult:
-    import math
+def _weighted_pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps):
+    """:func:`_pagerank_kernel`'s recurrence with weight-proportional
+    messages (``cols["w"]`` per edge) — the local strategy's kernel."""
+    import numpy as np
 
-    id_type = dict(v.dtypes)["id"]
-    payload = v.select(
-        F.col("id").alias("a"), F.lit(None).cast(id_type).alias("b"), F.lit(None).cast("double").alias("w")
-    ).unionByName(
-        e0.select(
-            F.col("src").cast(id_type).alias("a"),
-            F.col("dst").cast(id_type).alias("b"),
-            F.col("w"),
-        )
-    )
-    d = damping
+    nv = len(ids)
     track_sad = min_sad > 0.0
-
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({"a": [], "b": [], "w": []})
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        w_all = df.loc[is_edge, "w"].to_numpy(dtype="float64")
-        src_known = ~np.isnan(src_f)
-        both = src_known & ~np.isnan(dst_f)
-        outw = np.bincount(src_f[src_known].astype("int64"), weights=w_all[src_known], minlength=nv)
-        src = src_f[both].astype("int64")
-        dst = dst_f[both].astype("int64")
-        w = w_all[both]
-        dead = outw == 0.0
-        score = np.full(nv, 1.0 / nv)
-        sads: list[float] = []
-        steps = 0
-        converged = False
-        for _ in range(max_steps):
-            res_prev = score[dead].sum() / nv
-            msg = np.bincount(dst, weights=score[src] * w / outw[src], minlength=nv)
-            new = (1.0 - d) / nv + d * msg + d * res_prev
-            sad = float(np.abs(new - score).sum()) if track_sad else math.inf
-            sads.append(sad)
-            score = new
-            steps += 1
-            if track_sad and sad < min_sad:
-                converged = True
-                break
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame(
-            {
-                "id": vids,
-                "score": score,
-                "steps": np.int32(steps),
-                "converged": converged,
-                "sads": [sads] + [None] * (nv - 1),
-            }
-        )
-
-    out = payload.coalesce(1).mapInPandas(
-        solve, schema=f"id {id_type}, score double, steps int, converged boolean, sads array<double>"
-    ).localCheckpoint(eager=True)
-    meta = out.select("steps", "converged", "sads").first()
-    if meta is None:
-        return IterationResult(state=out.select("id", "score"), steps=0, converged=True, history=[])
-    history = [{"sad": s} for s in (meta["sads"] or [])]
-    return IterationResult(
-        state=out.select("id", "score"),
-        steps=int(meta["steps"]),
-        converged=bool(meta["converged"]),
-        history=history,
-    )
+    w_all = np.asarray(cols["w"], dtype="float64")
+    src_known = ~np.isnan(src_f)
+    both = src_known & ~np.isnan(dst_f)
+    outw = np.bincount(src_f[src_known].astype("int64"), weights=w_all[src_known], minlength=nv)
+    src = src_f[both].astype("int64")
+    dst = dst_f[both].astype("int64")
+    w = w_all[both]
+    dead = outw == 0.0
+    score = np.full(nv, 1.0 / nv)
+    sads: list[float] = []
+    converged = False
+    for _ in range(max_steps):
+        res_prev = score[dead].sum() / nv
+        msg = np.bincount(dst, weights=score[src] * w / outw[src], minlength=nv)
+        new = (1.0 - d) / nv + d * msg + d * res_prev
+        sad = float(np.abs(new - score).sum()) if track_sad else math.inf
+        sads.append(sad)
+        score = new
+        if track_sad and sad < min_sad:
+            converged = True
+            break
+    return {"score": score, "converged": converged, "history": [{"sad": s} for s in sads]}
 
 
 def _weighted_pagerank_loop(v, n, e0, damping, min_sad, max_steps, n_part) -> IterationResult:
@@ -696,147 +601,72 @@ def _ppr_loop(spark, v, e0, damping, min_sad, max_steps, n_part, p_col) -> Itera
     return result
 
 
-def _pagerank_local(spark, v, n, e0, damping, min_sad, max_steps, teleport=None, init=None) -> IterationResult:
+def _pagerank_local(v, e0, damping, min_sad, max_steps, teleport=None, init=None) -> IterationResult:
     """Single-task solve: vertices and edges stream through one mapInPandas
     task which runs the reference recurrence with numpy bincount mat-vecs.
-    One Spark job materializes the result; steps/SAD history ride along as
-    constant columns so the driver reads them from the checkpointed output
-    without recomputing."""
-    import math
-
-    id_type = dict(v.dtypes)["id"]
-    # vertex rows carry the teleport weight in ``w`` (null on edge rows);
-    # uniform pagerank passes teleport=None and ``w`` stays null throughout.
-    # A warm start rides the same pattern in ``s`` (normalized init score).
+    One Spark job materializes the result; steps/SAD history ride along so
+    the driver reads them from the checkpointed output without
+    recomputing."""
+    # vertex rows carry the teleport weight in ``w``; uniform pagerank
+    # passes teleport=None and ``w`` stays null throughout.  A warm start
+    # rides the same pattern in ``s`` (normalized init score).
     w_col = teleport if teleport is not None else F.lit(None).cast("double")
     vsel = v if init is None else v.join(init, "id")
     s_col = F.col("s0") if init is not None else F.lit(None).cast("double")
-    payload = vsel.select(
-        F.col("id").alias("a"), F.lit(None).cast(id_type).alias("b"), w_col.alias("w"), s_col.alias("s")
-    ).unionByName(
-        e0.select(
-            F.col("src").cast(id_type).alias("a"),
-            F.col("dst").cast(id_type).alias("b"),
-            F.lit(None).cast("double").alias("w"),
-            F.lit(None).cast("double").alias("s"),
-        )
+    kernel = partial(
+        _pagerank_kernel,
+        d=damping,
+        min_sad=min_sad,
+        max_steps=max_steps,
+        personalized=teleport is not None,
+        warm=init is not None,
     )
+    return local_graph_fixpoint(vsel.select("id", w_col.alias("w"), s_col.alias("s")), e0, kernel, "score double")
 
-    d = damping
-    personalized = teleport is not None
-    warm = init is not None
+
+def _pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps, personalized, warm):
+    """The reference recurrence as numpy bincount mat-vecs (the kernel of
+    :func:`_pagerank_local`); ``cols`` carries the teleport vector ``w``
+    and the warm-start vector ``s`` per vertex."""
+    import numpy as np
+
+    nv = len(ids)
     track_sad = min_sad > 0.0
-
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"a": [], "b": [], "w": [], "s": []})
-        )
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        # nullable columns coerce integral ids to float64 in pandas — bring
-        # edge endpoints back to the vertex dtype before the index lookup
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        # parity with the distributed loop: out-degree counts every edge
-        # whose SOURCE is a known vertex (e.groupBy('src') there), while
-        # message delivery additionally needs a known destination (the left
-        # join back onto the vertex set drops unknown-dst messages)
-        src_known = ~np.isnan(src_f)
-        both = src_known & ~np.isnan(dst_f)
-        outdeg = np.bincount(src_f[src_known].astype("int64"), minlength=nv).astype("float64")
-        src = src_f[both].astype("int64")
-        dst = dst_f[both].astype("int64")
-        dead = outdeg == 0.0
+    # parity with the distributed loop: out-degree counts every edge
+    # whose SOURCE is a known vertex (e.groupBy('src') there), while
+    # message delivery additionally needs a known destination (the left
+    # join back onto the vertex set drops unknown-dst messages)
+    src_known = ~np.isnan(src_f)
+    both = src_known & ~np.isnan(dst_f)
+    outdeg = np.bincount(src_f[src_known].astype("int64"), minlength=nv).astype("float64")
+    src = src_f[both].astype("int64")
+    dst = dst_f[both].astype("int64")
+    dead = outdeg == 0.0
+    if personalized:
+        pvec = np.asarray(cols["w"], dtype="float64")
+        score = pvec.copy()
+    elif warm:
+        score = np.asarray(cols["s"], dtype="float64")
+    else:
+        score = np.full(nv, 1.0 / nv)
+    sads: list[float] = []
+    converged = False
+    for _ in range(max_steps):
+        msg = np.bincount(dst, weights=score[src] / outdeg[src], minlength=nv)
         if personalized:
-            pvec = df.loc[~is_edge, "w"].to_numpy(dtype="float64")
-            score = pvec.copy()
-        elif warm:
-            score = df.loc[~is_edge, "s"].to_numpy(dtype="float64")
+            # dead-end mass restarts through the teleport vector
+            res_prev = score[dead].sum()
+            new = (1.0 - d) * pvec + d * msg + d * res_prev * pvec
         else:
-            score = np.full(nv, 1.0 / nv)
-        sads: list[float] = []
-        steps = 0
-        converged = False
-        for _ in range(max_steps):
-            msg = np.bincount(dst, weights=score[src] / outdeg[src], minlength=nv)
-            if personalized:
-                # dead-end mass restarts through the teleport vector
-                res_prev = score[dead].sum()
-                new = (1.0 - d) * pvec + d * msg + d * res_prev * pvec
-            else:
-                res_prev = score[dead].sum() / nv  # residual of the CURRENT state
-                new = (1.0 - d) / nv + d * msg + d * res_prev
-            sad = float(np.abs(new - score).sum()) if track_sad else math.inf
-            sads.append(sad)
-            score = new
-            steps += 1
-            if track_sad and sad < min_sad:
-                converged = True
-                break
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame(
-            {
-                "id": vids,
-                "score": score,
-                "steps": np.int32(steps),
-                "converged": converged,
-                # history only on row 0 — duplicating a 60-float list onto
-                # every vertex row would be O(|V|*steps) dead weight
-                "sads": [sads] + [None] * (nv - 1),
-            }
-        )
-
-    out = payload.coalesce(1).mapInPandas(
-        solve,
-        schema=f"id {id_type}, score double, steps int, converged boolean, sads array<double>",
-    ).localCheckpoint(eager=True)
-    meta = out.select("steps", "converged", "sads").first()
-    if meta is None:  # empty vertex set -> solver yielded no rows
-        return IterationResult(state=out.select("id", "score"), steps=0, converged=True, history=[])
-    history = [{"sad": s} for s in (meta["sads"] or [])]
-    return IterationResult(
-        state=out.select("id", "score"),
-        steps=int(meta["steps"]),
-        converged=bool(meta["converged"]),
-        history=history,
-    )
+            res_prev = score[dead].sum() / nv  # residual of the CURRENT state
+            new = (1.0 - d) / nv + d * msg + d * res_prev
+        sad = float(np.abs(new - score).sum()) if track_sad else math.inf
+        sads.append(sad)
+        score = new
+        if track_sad and sad < min_sad:
+            converged = True
+            break
+    return {"score": score, "converged": converged, "history": [{"sad": s} for s in sads]}
 
 
 def _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=None) -> IterationResult:

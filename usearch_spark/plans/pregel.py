@@ -15,6 +15,7 @@ same harness runs algorithms beyond the three ported from the reference.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -23,6 +24,8 @@ from usearch_spark.plans.iterative import (
     LOCAL_SOLVE_MAX_ROWS,
     IterationResult,
     checkpoint_with_metrics,
+    known_edges,
+    local_graph_fixpoint,
     loop_tuned_session,
     release_local_checkpoint,
     run_fixpoint,
@@ -133,7 +136,8 @@ def connected_components(
         # round just to be told it's big
         if strategy == "local" or vertices.count() + 2 * edges.count() <= LOCAL_SOLVE_MAX_ROWS:
             v = vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"])
-            return _components_local(v, und, max_steps)
+            kernel = partial(_components_kernel, max_steps=max_steps)
+            return local_graph_fixpoint(v, und, kernel, f"value {dict(v.dtypes)['id']}")
 
     def send(state: DataFrame, e: DataFrame) -> DataFrame:
         return state.join(e, state.id == e.src, "inner").select(
@@ -229,104 +233,31 @@ def label_propagation(
     return result
 
 
-def _components_local(v: DataFrame, e: DataFrame, max_steps: int) -> IterationResult:
+def _components_kernel(ids, src, dst, cols, max_steps):
     """Single-task min-label propagation (identical recurrence to the
     pregel path: value = least(own, min over in-neighbors), stop when no
     value changed)."""
-    id_type = dict(v.dtypes)["id"]
-    payload = v.select(F.col("id").alias("a"), F.lit(None).cast(id_type).alias("b")).unionByName(
-        e.select(F.col("src").cast(id_type).alias("a"), F.col("dst").cast(id_type).alias("b"))
-    )
+    import pandas as pd
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({"a": [], "b": []})
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        # nullable columns coerce integral ids to float64 in pandas
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        known = ~(np.isnan(src_f) | np.isnan(dst_f))
-        src = src_f[known].astype("int64")
-        dst = dst_f[known].astype("int64")
-
-        value = vids.copy()
-        changes: list[int] = []
-        steps = 0
-        converged = False
-        for _ in range(max_steps):
-            incoming = pd.DataFrame({"d": dst, "m": value[src]})
-            best = incoming.groupby("d")["m"].min()
-            new_value = value.copy()
-            di = best.index.to_numpy()
-            nm = best.to_numpy()
-            better = nm < value[di]
-            new_value[di[better]] = nm[better]
-            changed = int(better.sum())
-            value = new_value
-            steps += 1
-            changes.append(changed)
-            if changed == 0:
-                converged = True
-                break
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame(
-            {
-                "id": vids,
-                "value": value,
-                "steps": np.int32(steps),
-                "converged": converged,
-                "hist": [changes] + [None] * (nv - 1),
-            }
-        )
-
-    out = payload.coalesce(1).mapInPandas(
-        solve, schema=f"id {id_type}, value {id_type}, steps int, converged boolean, hist array<long>"
-    ).localCheckpoint(eager=True)
-    meta = out.select("steps", "converged", "hist").first()
-    if meta is None:  # empty vertex set -> solver yielded no rows
-        return IterationResult(state=out.select("id", "value"), steps=0, converged=True, history=[])
-    history = [{"changed": int(c)} for c in (meta["hist"] or [])]
-    return IterationResult(
-        state=out.select("id", "value"),
-        steps=int(meta["steps"]),
-        converged=bool(meta["converged"]),
-        history=history,
-    )
+    src, dst, _ = known_edges(src, dst)
+    value = ids.copy()
+    changes: list[dict] = []
+    converged = False
+    for _ in range(max_steps):
+        incoming = pd.DataFrame({"d": dst, "m": value[src]})
+        best = incoming.groupby("d")["m"].min()
+        new_value = value.copy()
+        di = best.index.to_numpy()
+        nm = best.to_numpy()
+        better = nm < value[di]
+        new_value[di[better]] = nm[better]
+        changed = int(better.sum())
+        value = new_value
+        changes.append({"changed": changed})
+        if changed == 0:
+            converged = True
+            break
+    return {"value": value, "converged": converged, "history": changes}
 
 
 def connected_components_star(

@@ -19,6 +19,8 @@ broadcast-small.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -26,6 +28,8 @@ from usearch_spark.plans.iterative import (
     LOCAL_SOLVE_MAX_ROWS,
     IterationResult,
     checkpoint_with_metrics,
+    known_edges,
+    local_graph_fixpoint,
     loop_tuned_session,
     release_local_checkpoint,
     run_fixpoint,
@@ -65,138 +69,64 @@ def shortest_paths(
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        return _sssp_local(spark, v, e0, src_id, max_steps)
+        kernel = partial(_sssp_kernel, src_id=src_id, max_steps=max_steps)
+        return local_graph_fixpoint(v, e0, kernel, f"cost long, prev_in_path {dict(v.dtypes)['id']}")
     # partitions sized by the dominant per-step volume (edges, usually)
     with loop_tuned_session(spark, max(n, n_edges)) as n_part:
         return _sssp_loop(spark, v, e0, src_id, max_steps, n_part)
 
 
-def _sssp_local(spark, v, e0, src_id, max_steps) -> IterationResult:
+def _sssp_kernel(ids, src, dst, cols, src_id, max_steps):
     """Single-task Bellman-Ford wave (same recurrence as _sssp_loop): one
-    Spark job; steps/actives ride along as constant columns."""
-    id_type = dict(v.dtypes)["id"]
-    payload = v.select(
-        F.col("id").alias("a"),
-        F.lit(None).cast(id_type).alias("b"),
-        F.lit(None).cast("long").alias("w"),
-    ).unionByName(
-        e0.select(
-            F.col("src").cast(id_type).alias("a"),
-            F.col("dst").cast(id_type).alias("b"),
-            F.col("weight").alias("w"),
-        )
-    )
+    Spark job; the per-step active counts are the history."""
+    import numpy as np
+    import pandas as pd
 
-    def solve(batches):
-        import ctypes as _ct
-        import gc as _gc
-
-        # worker prelude (see session.udf_worker_prelude for the measured
-        # pathology): (1) malloc heap reuse — large numpy temporaries
-        # otherwise re-mmap and re-FAULT every task, and fresh pages on
-        # this host are a fault-cost lottery (THP zero+compact storms);
-        # (2) pause cyclic gc for the body — threshold sweeps re-trace
-        # the millions of surviving row objects (ONE sweep in the
-        # epilogue after the big frames are dropped)
-        try:
-            _libc = _ct.CDLL("libc.so.6", use_errno=True)
-            _libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD
-            _libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD
-        except Exception:
-            pass  # non-glibc: skip
-        _gc.disable()
-        import numpy as np
-        import pandas as pd
-
-        parts = list(batches)
-        df = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({"a": [], "b": [], "w": []})
-        is_edge = df["b"].notna()
-        vids = df.loc[~is_edge, "a"].to_numpy()
-        nv = len(vids)
-        if nv == 0:
-            _gc.enable()  # early exit: re-arm cyclic gc for the worker
-            return
-        idx = pd.Series(np.arange(nv), index=vids)
-        # nullable columns coerce integral ids to float64 in pandas
-        a_vals = df.loc[is_edge, "a"]
-        b_vals = df.loc[is_edge, "b"]
-        if a_vals.dtype != vids.dtype:
-            a_vals = a_vals.astype(vids.dtype)
-        if b_vals.dtype != vids.dtype:
-            b_vals = b_vals.astype(vids.dtype)
-        src_f = idx.reindex(a_vals).to_numpy()
-        dst_f = idx.reindex(b_vals).to_numpy()
-        known = ~(np.isnan(src_f) | np.isnan(dst_f))
-        src = src_f[known].astype("int64")
-        dst = dst_f[known].astype("int64")
-        w = df.loc[is_edge, "w"].to_numpy()[known].astype("int64")
-
-        INF = np.iinfo("int64").max
-        cost = np.full(nv, INF, dtype="int64")
-        prev = np.full(nv, None, dtype=object)
-        improved = np.zeros(nv, dtype=bool)
-        if src_id in idx.index:
-            s = int(idx[src_id])
-            cost[s] = 0
-            improved[s] = True
-        actives: list[int] = []
-        steps = 0
-        converged = False
-        for _ in range(max_steps):
-            m = improved[src]
-            active = 0
-            new_improved = np.zeros(nv, dtype=bool)
-            if m.any():
-                cand = pd.DataFrame(
-                    {"d": dst[m], "c": cost[src[m]] + w[m], "via": vids[src[m]]}
-                )
-                # per destination: min cost, ties to the smallest via id —
-                # the distributed loop's F.min(struct(new_cost, via))
-                best = cand.sort_values(["d", "c", "via"]).groupby("d", sort=False).first()
-                di = best.index.to_numpy()
-                bc = best["c"].to_numpy()
-                wins = bc < cost[di]
-                if wins.any():
-                    upd = di[wins]
-                    cost[upd] = bc[wins]
-                    prev[upd] = best["via"].to_numpy()[wins]
-                    new_improved[upd] = True
-                    active = int(wins.sum())
-            improved = new_improved
-            steps += 1
-            actives.append(active)
-            if active == 0:
-                converged = True
-                break
-        # gc epilogue: drop the big build frames, then pay the ONE cyclic
-        # sweep of the task here instead of N threshold sweeps mid-build
-        del df, parts
-        _gc.enable(); _gc.collect()
-        yield pd.DataFrame(
-            {
-                "id": vids,
-                "cost": [None if c == INF else int(c) for c in cost],
-                "prev_in_path": prev,
-                "steps": np.int32(steps),
-                "converged": converged,
-                "actives": [actives] + [None] * (nv - 1),
-            }
-        )
-
-    out = payload.coalesce(1).mapInPandas(
-        solve,
-        schema=f"id {id_type}, cost long, prev_in_path {id_type}, steps int, converged boolean, actives array<long>",
-    ).localCheckpoint(eager=True)
-    meta = out.select("steps", "converged", "actives").first()
-    if meta is None:  # empty vertex set -> solver yielded no rows
-        return IterationResult(state=out.drop("steps", "converged", "actives"), steps=0, converged=True, history=[])
-    history = [{"active": int(a)} for a in (meta["actives"] or [])]
-    return IterationResult(
-        state=out.select("id", "cost", "prev_in_path"),
-        steps=int(meta["steps"]),
-        converged=bool(meta["converged"]),
-        history=history,
-    )
+    nv = len(ids)
+    src, dst, known = known_edges(src, dst)
+    w = cols["weight"][known].astype("int64")
+    INF = np.iinfo("int64").max
+    cost = np.full(nv, INF, dtype="int64")
+    prev = np.full(nv, None, dtype=object)
+    improved = np.zeros(nv, dtype=bool)
+    idx = pd.Index(ids)
+    if src_id in idx:
+        s = idx.get_loc(src_id)
+        cost[s] = 0
+        improved[s] = True
+    actives: list[dict] = []
+    converged = False
+    for _ in range(max_steps):
+        m = improved[src]
+        active = 0
+        new_improved = np.zeros(nv, dtype=bool)
+        if m.any():
+            cand = pd.DataFrame(
+                {"d": dst[m], "c": cost[src[m]] + w[m], "via": ids[src[m]]}
+            )
+            # per destination: min cost, ties to the smallest via id —
+            # the distributed loop's F.min(struct(new_cost, via))
+            best = cand.sort_values(["d", "c", "via"]).groupby("d", sort=False).first()
+            di = best.index.to_numpy()
+            bc = best["c"].to_numpy()
+            wins = bc < cost[di]
+            if wins.any():
+                upd = di[wins]
+                cost[upd] = bc[wins]
+                prev[upd] = best["via"].to_numpy()[wins]
+                new_improved[upd] = True
+                active = int(wins.sum())
+        improved = new_improved
+        actives.append({"active": active})
+        if active == 0:
+            converged = True
+            break
+    return {
+        "cost": [None if c == INF else int(c) for c in cost],
+        "prev_in_path": prev,
+        "converged": converged,
+        "history": actives,
+    }
 
 
 def _sssp_loop(spark, v, e0, src_id, max_steps, n_part) -> IterationResult:

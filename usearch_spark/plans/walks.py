@@ -49,22 +49,24 @@ def _resolve_strategy(starts: DataFrame, id_col: str, strategy: str) -> str:
     """Resolve "auto" to "pruned"/"ranked" by start-row count.
 
     The size probe is a bounded limit+count (one eager job — "auto" and a
-    forced "pruned" are no longer lazy until the first checkpoint); it
-    counts the ROWS of ``starts`` as passed by the caller, so
+    forced "pruned" are no longer lazy until the first checkpoint); for
+    "auto" it counts the ROWS of ``starts`` as passed by the caller, so
     ``random_walks`` probes raw rows while ``node2vec_walks`` (which
     dedups before resolving) probes deduped rows — an over-count can only
     pick the scale-safe "ranked" path early, never the reverse.
 
-    A FORCED "pruned" above PRUNED_MAX_STARTS raises: each step collects
-    the distinct in-flight vertex set to the driver and feeds it to an
-    ``isin`` literal, so an unbounded start set would blow driver memory /
-    expression-tree size (the r15-verdict guard ask).
+    A FORCED "pruned" above PRUNED_MAX_STARTS DISTINCT starts raises: each
+    step collects the distinct in-flight vertex set to the driver and
+    feeds it to an ``isin`` literal, so an unbounded start set would blow
+    driver memory / expression-tree size (the r15-verdict guard ask).
+    The guard counts distinct ids because that set is what the path
+    collects: many rows over few ids are valid input.
     """
     if strategy == "pruned":
-        n = starts.select(id_col).limit(PRUNED_MAX_STARTS + 1).count()
+        n = starts.select(id_col).dropDuplicates().limit(PRUNED_MAX_STARTS + 1).count()
         if n > PRUNED_MAX_STARTS:
             raise ValueError(
-                f"strategy='pruned' needs <= {PRUNED_MAX_STARTS} start rows "
+                f"strategy='pruned' needs <= {PRUNED_MAX_STARTS} distinct starts "
                 f"(got > {PRUNED_MAX_STARTS}): the per-step visited-set "
                 "collect/isin does not scale — use strategy='ranked' or 'auto'"
             )

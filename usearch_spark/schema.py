@@ -1,6 +1,6 @@
-"""Canonical schemas for the engine's core entities.
+"""The engine's data model and the testdata table list.
 
-Mirrors the reference data model (see SURVEY.md §1):
+The core entities mirror the reference data model (see SURVEY.md §1):
   - Link   (graph vertex):   reference linkgraph/graph/graph.go:71-75
   - Edge   (graph edge):     reference linkgraph/graph/graph.go:79-84
   - Document (indexed page): reference textindexer/index/doc.go:10-28
@@ -14,53 +14,6 @@ single store).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
-
-LINK_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("retrieved_at", T.TimestampType(), True),
-    ]
-)
-
-EDGE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
-
-DOCUMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("link_id", T.StringType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("content", T.StringType(), True),
-        T.StructField("pagerank", T.DoubleType(), True),
-        T.StructField("indexed_at", T.TimestampType(), True),
-    ]
-)
-
-# Crawl-time record: one row per fetched page. Array columns replace the
-# reference's pooled mutable payload (crawler/payload.go:18-54).
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("link_id", T.StringType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("retrieved_at", T.TimestampType(), True),
-        T.StructField("raw_content", T.StringType(), True),
-        T.StructField("status_code", T.IntegerType(), True),
-        T.StructField("content_type", T.StringType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
-        T.StructField("nofollow_links", T.ArrayType(T.StringType()), True),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("text_content", T.StringType(), True),
-    ]
-)
 
 TESTDATA_TABLES = (
     "region",

@@ -17,6 +17,20 @@ from pyspark.sql import SparkSession
 _shipped: set[str] = set()
 
 
+def _keep_malloc_heap() -> None:
+    """Raise glibc's M_MMAP_THRESHOLD and M_TRIM_THRESHOLD so large numpy
+    temporaries come from the sbrk heap and the heap stays attached to the
+    worker (the malloc half of ``udf_worker_prelude``'s measurements)."""
+    import ctypes
+
+    try:
+        libc = ctypes.CDLL("libc.so.6", use_errno=True)
+        for param in (-3, -1):  # M_MMAP_THRESHOLD, M_TRIM_THRESHOLD
+            libc.mallopt(param, 1 << 30)
+    except Exception:
+        pass  # non-glibc platform: skip
+
+
 def udf_worker_prelude() -> None:
     """Call at the TOP of a numpy/pandas-heavy UDF body (mapInPandas /
     applyInPandas solvers).  Two instrumented worker pathologies, both
@@ -45,27 +59,17 @@ def udf_worker_prelude() -> None:
        objects stay collectable and freezing is idempotent.
 
     Bodies that allocate MILLIONS of SURVIVING objects (the graph local
-    solves building object-string frames) use a stronger inline variant:
-    same mallopt, then ``gc.disable()`` for the body and ONE
-    ``gc.enable(); gc.collect()`` sweep in an epilogue after the big
-    frames are dropped — freeze alone makes those worse (the shrunken
-    long-lived count makes full sweeps MORE frequent).
+    solves building object-string frames) use the stronger policy of
+    ``plans.iterative.local_task``: the same malloc thresholds, then
+    ``gc.disable()`` for the body and ONE ``gc.enable(); gc.collect()``
+    sweep after the big frames are dropped — freeze alone makes those
+    worse (the shrunken long-lived count makes full sweeps MORE frequent).
     """
-    import ctypes
     import gc
 
-    try:
-        libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        libc.mallopt(-3, 1 << 30)  # M_MMAP_THRESHOLD: big allocs via sbrk
-        libc.mallopt(-1, 1 << 30)  # M_TRIM_THRESHOLD: keep the heap
-    except Exception:
-        pass  # non-glibc platform: skip
+    _keep_malloc_heap()
     gc.enable()
     gc.freeze()
-
-
-# Back-compat alias (pre-r15 name)
-freeze_worker_gc = udf_worker_prelude
 
 
 def spread_small_scan(df, min_parallelism: int | None = None):

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from usearch_spark.plans.iterative import release_local_checkpoint
 from usearch_spark.streaming.sketches import (
     _commit_current,
     _guard_epoch,
@@ -155,6 +156,7 @@ def pagerank_stream_rerank(
                 init_scores=init,
             )
             res.state.write.mode("overwrite").parquet(os.path.join(vdir, "scores"))
+            release_local_checkpoint(edges)
             since, ranked, steps_run = 0, True, res.steps
         else:
             # carry the previous scores forward unchanged
@@ -163,6 +165,9 @@ def pagerank_stream_rerank(
             )
             prev.write.mode("overwrite").parquet(os.path.join(vdir, "scores"))
             ranked, steps_run = False, 0
+        # the epoch's checkpoints are dead once its scores are written —
+        # release them now, or every micro-batch pins one more block set
+        release_local_checkpoint(new_edges)
         tmp = os.path.join(vdir, "_meta.json.tmp")
         with open(tmp, "w") as fh:
             json.dump(
