@@ -92,6 +92,56 @@ def test_search_pagination(engine):
     assert {r["url"] for r in p1.collect()} | {r["url"] for r in p2.collect()} == {HUB, PAGE_A, PAGE_B}
 
 
+PARITY_QUERIES = [
+    ("shared term", {}),  # MATCH
+    ('"content on page a"', {}),  # PHRASE
+    ("zebra", {}),  # no hits
+    ("shared", {"offset": 5}),  # offset past the end
+]
+
+
+def test_search_page_matches_udf_assembly(engine, spark):
+    """The engine's driver-assembled page equals the UDF assembly of the
+    index's page, every column, with a session time zone that is not the
+    process's (a page round-tripped through Python datetimes would shift
+    ``indexed_at``)."""
+    from usearch_spark.operators.summarize import assemble_results
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        for expression, kw in PARITY_QUERIES:
+            total, page = engine.search(expression, **kw)
+            ref_total, ref_page = engine.index().search(expression, **kw)
+            ref = assemble_results(ref_page, expression)
+            assert total == ref_total
+            assert page.schema == ref.schema
+            assert page.collect() == ref.collect(), expression
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_search_runs_no_python_worker(engine, spark):
+    """A served page is a local frame (its collect starts no Spark job), and
+    the index's MATCH plan scans no Python-built frame and runs no Python
+    UDF."""
+    sc = spark.sparkContext
+    total, page = engine.search("shared term")
+    assert total == 3
+    assert "LocalTableScan" in page._jdf.queryExecution().executedPlan().toString()
+    group = "test-search-page-collect"
+    sc.setJobGroup(group, "page collect")
+    try:
+        assert len(page.collect()) == 3
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _, match_page = engine.index().search("shared term")
+    plan = match_page._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" not in plan
+    assert "ArrowEvalPython" not in plan
+
+
 def test_reindex_preserves_pagerank(engine, spark):
     """Re-crawl after pagerank: scores must survive the re-index (S8)."""
     fetch = static_fetcher(PAGES)

@@ -90,3 +90,29 @@ def test_assemble_results(spark):
     assert out["d2"]["display_title"] == "http://x/2"
     assert out["d3"]["display_title"] == "http://x/3"
     assert out["d1"]["display_title"] == "Title One"
+
+
+def test_assemble_on_driver_matches_assemble_results(spark):
+    """The driver-side assembly and the UDF assembly give the same schema
+    and rows, across the title fallbacks (null, empty, spaces-only, a tab,
+    which Spark's trim keeps) and a null content."""
+    from usearch_spark.operators.summarize import assemble_on_driver
+
+    page = spark.createDataFrame(
+        [
+            ("d1", "http://x/1", "Title One", "Alpha beta gamma. KEYWORD1 is here. Tail."),
+            ("d2", "http://x/2", "", "nothing relevant"),
+            ("d3", "http://x/3", None, "KEYWORD1 leads. keyword1 again!"),
+            ("d4", "http://x/4", "   ", None),
+            ("d5", "http://x/5", "\t", "Some KEYWORD2 and KEYWORD1."),
+        ],
+        "link_id string, url string, title string, content string",
+    )
+    expression = "KEYWORD1 KEYWORD2"
+    ref = assemble_results(page, expression)
+    local = assemble_on_driver(page, expression)
+    assert local.schema == ref.schema
+    rows = sorted(local.collect())
+    assert rows == sorted(ref.collect())
+    titles = {r["link_id"]: r["display_title"] for r in rows}
+    assert titles == {"d1": "Title One", "d2": "http://x/2", "d3": "http://x/3", "d4": "http://x/4", "d5": "\t"}

@@ -13,11 +13,12 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from usearch_spark.operators.search import MATCH, SearchIndex
-from usearch_spark.operators.summarize import assemble_results
+from usearch_spark.operators.summarize import assemble_on_driver
 from usearch_spark.sources.graph_store import ParquetGraphStore
 from usearch_spark.sources.index_store import update_scores
 from usearch_spark.plans.pagerank import pagerank
@@ -54,8 +55,10 @@ class USearchEngine:
 
     # --- passes -----------------------------------------------------------
     def seed(self, urls: list[str]) -> None:
-        """Add seed URLs to the link graph (never retrieved -> due)."""
-        df = self.spark.createDataFrame([(u,) for u in urls], "url string")
+        """Add seed URLs to the link graph (never retrieved -> due).  The
+        frame is built from Arrow: one built from a Python list is a
+        PythonRDD, whose every action waits on Python workers."""
+        df = self.spark.createDataFrame(pa.table({"url": pa.array(urls, pa.string())}))
         self.graph.upsert_links(df)
 
     def run_crawl_pass(
@@ -157,8 +160,14 @@ class USearchEngine:
         self, expression: str, mode: str = MATCH, offset: int = 0, size: int = 10, with_summaries: bool = True
     ) -> tuple[int, DataFrame]:
         """GET /search parity: (total_count, page with summary/highlight/
-        display-title columns)."""
+        display-title columns).
+
+        With summaries, the page (at most ``size`` rows) is collected once
+        and assembled on the driver by ``assemble_on_driver``, with the
+        code ``assemble_results`` runs in its UDF.  The page comes back as a
+        local frame: collecting it starts no Spark job, and no step of the
+        search runs in a Python worker."""
         total, page = self.index().search(expression, mode=mode, offset=offset, size=size)
         if with_summaries:
-            page = assemble_results(page, expression)
+            page = assemble_on_driver(page, expression)
         return total, page

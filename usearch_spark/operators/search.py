@@ -16,8 +16,11 @@ Scale notes:
     keyed by (term, doc).  At 100 TB the postings table is written out
     partitioned/bucketed by term so that query-time term lookups are
     partition-pruned joins, not full scans.
-  - Query-time scoring broadcasts the tiny (terms × df) table; the doc-side
-    join is a broadcast hash join with no shuffle of the postings.
+  - Query-time scoring broadcasts the query's rows of the (term, df) table,
+    cut by an ``isin`` filter of the query terms; the doc-side join is a
+    broadcast hash join with no shuffle of the postings.  No query-side
+    frame is built from a Python list: such a frame is a PythonRDD scan,
+    and every action over it waits on Python workers.
   - Pagination is ORDER BY ... LIMIT/OFFSET (TakeOrderedAndProject),
     never a global row_number window (which would single-partition the sort).
 """
@@ -86,12 +89,11 @@ def score_match(
     Best-fields semantics collapse to summed tf-idf here because title and
     content share one postings list.
     """
-    terms = sorted(set(terms))
-    spark = postings.sparkSession
-    terms_df = spark.createDataFrame([(t,) for t in terms], "term string")
-    # terms × df is tiny -> broadcast; postings side never shuffles.
+    # the query's (term, df) rows are tiny -> broadcast; postings side
+    # never shuffles
     weights = F.broadcast(
-        terms_df.join(dfreq, "term", "inner").withColumn("idf", idf_column(n_docs, F.col("df")))
+        dfreq.filter(F.col("term").isin(sorted(set(terms))))
+        .withColumn("idf", idf_column(n_docs, F.col("df")))
     )
     scored = (
         postings.join(weights, "term", "inner")
@@ -126,18 +128,16 @@ def score_bm25(
 
     score(doc) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
 
-    Plan shape mirrors :func:`score_match`: the (terms × df) weight table is
-    broadcast, the doc-length side joins on the postings' own id key, and
-    the final agg is a partial-aggregated groupBy — nothing shuffles the
-    postings beyond their bucketed layout.  ``avgdl`` is the mean analyzed
-    length over docs that have at least one token (computed from ``doclen``
-    so both engines see the identical population).
+    Plan shape mirrors :func:`score_match`: the query's (term, df) weight
+    rows are broadcast, the doc-length side joins on the postings' own id
+    key, and the final agg is a partial-aggregated groupBy — nothing
+    shuffles the postings beyond their bucketed layout.  ``avgdl`` is the
+    mean analyzed length over docs that have at least one token (computed
+    from ``doclen`` so both engines see the identical population).
     """
-    terms = sorted(set(terms))
-    spark = postings.sparkSession
-    terms_df = spark.createDataFrame([(t,) for t in terms], "term string")
     weights = F.broadcast(
-        terms_df.join(dfreq, "term", "inner").withColumn("idf", idf_column(n_docs, F.col("df")))
+        dfreq.filter(F.col("term").isin(sorted(set(terms))))
+        .withColumn("idf", idf_column(n_docs, F.col("df")))
     )
     # avgdl: exact long sum / long count -> one double division, identical
     # bits in any engine (no float accumulation order involved)
@@ -397,15 +397,13 @@ def fuzzy_match_terms(
 
     Scale shape: the vocabulary side explodes to (len+1) variant rows per
     term ONCE (index-time at scale), the query side is a handful of
-    literals joined by variant, and the verify is per-candidate.  No scan
-    of the corpus, no cross join of the vocabulary.
+    literals that filter the variants, and the verify is per-candidate.
+    No scan of the corpus, no cross join of the vocabulary.
 
     Output: (term, df, dist) top by (dist asc, df desc, term).
     """
-    spark = dfreq.sparkSession
     q = query_term
     q_variants = [q] + [q[:i] + q[i + 1 :] for i in range(len(q))]
-    qv = spark.createDataFrame([(v,) for v in sorted(set(q_variants))], "variant string")
     t = F.col("term")
     idx = F.sequence(F.lit(0), F.length(t))
     variants = F.transform(
@@ -416,7 +414,7 @@ def fuzzy_match_terms(
     )
     vocab_v = dfreq.select("term", "df", F.explode(F.array_distinct(variants)).alias("variant"))
     cands = (
-        vocab_v.join(F.broadcast(qv), "variant")
+        vocab_v.filter(F.col("variant").isin(sorted(set(q_variants))))
         .select("term", "df")
         .dropDuplicates(["term"])
         .withColumn("dist", F.levenshtein(F.col("term"), F.lit(q)))

@@ -16,9 +16,16 @@ Parity with the reference frontend:
     closing tag; fixed to '</em>' here);
   - result assembly: title falls back to URL (frontend.go:405-413).
 
-The per-document logic runs in an Arrow-batched pandas UDF — it is
-inherently sequential per document (sentence scanning), the classic
-Python-UDF-is-OK case.  Everything batch-level stays in DataFrames.
+The per-document logic is one Python function, ``summary_html`` — it is
+inherently sequential per document (sentence scanning).  It runs in two
+places:
+  - ``assemble_results`` (DataFrame API, any number of rows): an
+    Arrow-batched pandas UDF, the classic Python-UDF-is-OK case;
+  - ``assemble_on_driver`` (one result page, at most ``size`` rows): the
+    page is collected once as Arrow, a plain loop computes the columns,
+    pyarrow appends them, and the page comes back as a local frame.  The
+    engine serves its result page this way, so a search starts no Python
+    worker.
 """
 
 from __future__ import annotations
@@ -26,8 +33,10 @@ from __future__ import annotations
 import unicodedata
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 
 def _is_punct(c: str) -> bool:
@@ -138,6 +147,12 @@ def highlight_expr(col: Column, terms: list[str]) -> Column:
     return out
 
 
+def summary_html(content: str | None, terms: list[str], max_summary_len: int = 256) -> str:
+    """One result row's summary cell: the reference summary of ``content``
+    with every term highlighted (summarizer.go + highlighter.go)."""
+    return highlight(summarize(content or "", terms, max_summary_len), terms)
+
+
 def _terms_of(expression: str) -> list[str]:
     return [t for t in expression.strip('"').split() if t]
 
@@ -157,10 +172,9 @@ def with_summary(
 
     @F.pandas_udf("string")
     def summary_udf(content: pd.Series) -> pd.Series:
-        from usearch_spark.operators.summarize import highlight as hl
-        from usearch_spark.operators.summarize import summarize as summ
+        from usearch_spark.operators.summarize import summary_html
 
-        return content.map(lambda c: hl(summ(c or "", terms, max_summary_len), terms))
+        return content.map(lambda c: summary_html(c, terms, max_summary_len))
 
     return df.withColumn(out_col, summary_udf(F.col(content_col)))
 
@@ -175,3 +189,26 @@ def assemble_results(page: DataFrame, expression: str) -> DataFrame:
             F.col("title").isNull() | (F.trim(F.col("title")) == ""), F.col("url")
         ).otherwise(F.col("title")),
     )
+
+
+def assemble_on_driver(page: DataFrame, expression: str) -> DataFrame:
+    """:func:`assemble_results` for a bounded page, computed on the driver:
+    the same rows and schema, returned as a local frame (a LocalTableScan,
+    whose collect starts no Spark job).  The page is collected once with
+    ``toArrow`` and stays Arrow, so timestamps keep their instants whatever
+    the session and process time zones.  Spark's ``trim`` strips only ' ',
+    hence ``strip(" ")``."""
+    table = page.toArrow()
+    terms = _terms_of(expression)
+    summaries = [summary_html(c, terms) for c in table.column("content").to_pylist()]
+    titles = [
+        u if t is None or t.strip(" ") == "" else t
+        for t, u in zip(table.column("title").to_pylist(), table.column("url").to_pylist())
+    ]
+    table = table.append_column("summary", pa.array(summaries, pa.string())).append_column(
+        "display_title", pa.array(titles, pa.string())
+    )
+    schema = StructType(
+        page.schema.fields + [StructField("summary", StringType()), StructField("display_title", StringType())]
+    )
+    return page.sparkSession.createDataFrame(table, schema)
