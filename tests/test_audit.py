@@ -45,9 +45,6 @@ def test_benford_terms_exact_python_replay(spark):
     """The digit histogram and every chi-square term match the exact
     Python replay on constructed amounts (first digit from exact cents,
     injected log10 literals — no engine-side log)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from __spark_entry__ import _benford_weights
 
     from pyspark.sql import functions as F

@@ -6,14 +6,17 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 from tests.conftest import SF_SMOKE
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def test_probe_protocol_shape(spark):
     """probe() runs the interleaved-rep protocol and reports reps,
     median, min and the load stamps for every probed query."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import bench_probe
 
     out = bench_probe.probe(
@@ -30,7 +33,7 @@ def test_probe_protocol_shape(spark):
 
 
 def test_probe_rejects_unknown_query(spark):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import bench_probe
     import pytest
 
@@ -51,7 +54,7 @@ def test_probe_cli_prints_one_json_line():
         [sys.executable, "tools/bench_probe.py", SF_SMOKE, "point_lookup"],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         env={**os.environ, "SPARK_GRAFT_PROBE_REPS": "1"},
         timeout=600,
     )
@@ -64,7 +67,7 @@ def test_probe_cli_prints_one_json_line():
 def test_parse_args_sf_prefixed_query_name_not_consumed(tmp_path, monkeypatch):
     """A query name starting with 'sf' must NOT be swallowed as the SF
     directory (ADVICE r14): only tokens resolving to an existing dir are."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import bench_probe
 
     monkeypatch.delenv("SPARK_GRAFT_SF_DIR", raising=False)
@@ -80,7 +83,7 @@ def test_parse_args_sf_prefixed_query_name_not_consumed(tmp_path, monkeypatch):
 
 
 def test_parse_args_explicit_flag_and_validation(tmp_path):
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import bench_probe
     import pytest
 
@@ -96,7 +99,7 @@ def test_parse_args_explicit_flag_and_validation(tmp_path):
 def test_diag_probe_shape(spark):
     """--diag stamps per-rep worker diagnostics (the r14-verdict
     instrumentation ask): JVM cpu, python-worker cpu, gc, worker churn."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(ROOT / "tools"))
     import bench_probe
 
     out = bench_probe.probe(spark, ["point_lookup"], SF_SMOKE, reps=2, diag=True)

@@ -1025,6 +1025,49 @@ def test_pagerank_pregel_loops_release_superseded_checkpoints(spark):
         )
 
 
+@pytest.mark.parametrize("strategy", ["local", "distributed"])
+def test_pagerank_family_and_hits_release_their_input_checkpoints(spark, strategy):
+    """A PageRank-family or HITS call leaves only its result pinned: the
+    vertex, edge and warm-start checkpoints it took and the loop's initial
+    state are released before it returns, not at GC time."""
+    import gc
+
+    from usearch_spark.plans.hits import hits
+    from usearch_spark.plans.pagerank import (
+        pagerank,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    n = 40
+    v = spark.createDataFrame([(str(i),) for i in range(n)], "id string")
+    e = spark.createDataFrame(
+        [(str(i), str((i + 1) % n)) for i in range(n)], "src string, dst string"
+    )
+    warm = v.withColumn("score", F.lit(1.0 / n))
+
+    def pinned_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    kw = dict(min_sad=0.0, max_steps=10, strategy=strategy)
+
+    for name, run in (
+        ("pagerank", lambda: pagerank(v, e, **kw)),
+        ("pagerank warm", lambda: pagerank(v, e, init_scores=warm, **kw)),
+        ("ppr", lambda: personalized_pagerank(v, e, ["0", "7"], **kw)),
+        ("weighted", lambda: weighted_pagerank(v, e.withColumn("weight", F.lit(1.0)), **kw)),
+        ("hits", lambda: hits(v, e, rounds=10, strategy=strategy)),
+    ):
+        gc.collect()  # settle leftovers from other tests first
+        before = pinned_ids()
+        res = run()
+        # NO gc here: the release must be eager.  New ids only, so an
+        # asynchronous cleanup of older RDDs cannot hide a leak
+        left = pinned_ids() - before
+        assert len(left) <= 1, f"{name}: the call left {len(left)} pinned RDDs"
+        assert res.state.count() == n  # the result itself is still readable
+
+
 def test_release_local_checkpoint_noop_on_lazy_frames(spark):
     """release_local_checkpoint is best-effort by contract: a lazy frame,
     a derived select over a checkpoint, and None must all no-op (never

@@ -6,7 +6,6 @@ shipped package)."""
 
 from __future__ import annotations
 
-import math
 import os
 import subprocess
 import sys
@@ -33,11 +32,7 @@ def _graph(vertices, edges):
 @pytest.mark.parametrize("vertices,edges,expected", CASES)
 def test_pagerank_kernel_goldens_without_spark(vertices, edges, expected):
     ids, src, dst = _graph(vertices, edges)
-    nulls = np.full(len(ids), math.nan)
-    out = _pagerank_kernel(
-        ids, src, dst, {"w": nulls, "s": nulls},
-        d=0.85, min_sad=0.001, max_steps=100, personalized=False, warm=False,
-    )
+    out = _pagerank_kernel(ids, src, dst, {}, d=0.85, min_sad=0.001, max_steps=100)
     assert out["converged"]
     assert out["history"][-1]["sad"] < 0.001
     scores = dict(zip(ids, out["score"]))
@@ -52,14 +47,32 @@ def test_pagerank_kernel_drops_unknown_destinations():
     vertex set): A's mass leaks, so the scores no longer sum to 1."""
     ids, src, dst = _graph(["A", "B"], [("A", "B"), ("A", "X"), ("B", "A")])
     assert np.isnan(dst[1])
-    nulls = np.full(2, math.nan)
-    out = _pagerank_kernel(
-        ids, src, dst, {"w": nulls, "s": nulls},
-        d=0.85, min_sad=0.0, max_steps=1, personalized=False, warm=False,
-    )
+    out = _pagerank_kernel(ids, src, dst, {}, d=0.85, min_sad=0.0, max_steps=1)
     # one step from uniform 1/2: A gets B's whole half, B gets half of A's
     assert out["score"][0] == pytest.approx(0.15 / 2 + 0.85 * 0.5)
     assert out["score"][1] == pytest.approx(0.15 / 2 + 0.85 * 0.25)
+
+
+@pytest.mark.parametrize("vertices,edges,expected", CASES)
+def test_pagerank_kernel_unit_weights_match_unweighted(vertices, edges, expected):
+    """Weighted PageRank with every weight 1 is uniform PageRank, bit for
+    bit: Σw_out is the out-degree and score·1/deg is score/deg."""
+    ids, src, dst = _graph(vertices, edges)
+    plain = _pagerank_kernel(ids, src, dst, {}, d=0.85, min_sad=0.001, max_steps=100)
+    unit = _pagerank_kernel(ids, src, dst, {"w": np.ones(len(src))}, d=0.85, min_sad=0.001, max_steps=100)
+    assert np.array_equal(unit["score"], plain["score"])
+    assert unit["history"] == plain["history"]
+
+
+@pytest.mark.parametrize("vertices,edges,expected", CASES)
+def test_pagerank_kernel_uniform_teleport_matches_uniform(vertices, edges, expected):
+    """Personalized PageRank teleporting to every vertex alike (p = 1/n)
+    is uniform PageRank."""
+    ids, src, dst = _graph(vertices, edges)
+    plain = _pagerank_kernel(ids, src, dst, {}, d=0.85, min_sad=0.0, max_steps=30)
+    p = np.full(len(ids), 1.0 / len(ids))
+    ppr = _pagerank_kernel(ids, src, dst, {"p": p}, d=0.85, min_sad=0.0, max_steps=30)
+    np.testing.assert_allclose(ppr["score"], plain["score"], rtol=0, atol=1e-12)
 
 
 def test_hits_kernel_bipartite_without_spark():

@@ -15,12 +15,13 @@ Usage:  python tools/check_fetchdf.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from usearch_spark.schema import TESTDATA_TABLES
 from usearch_spark.session import get_spark

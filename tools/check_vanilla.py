@@ -11,11 +11,12 @@ Usage:  python tools/check_vanilla.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

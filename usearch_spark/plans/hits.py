@@ -28,6 +28,7 @@ from usearch_spark.plans.iterative import (
     known_edges,
     local_graph_solve,
     loop_tuned_session,
+    release_local_checkpoint,
     run_fixpoint,
 )
 
@@ -63,9 +64,14 @@ def hits(
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
         out = local_graph_solve(v, e0, partial(_hits_kernel, rounds=rounds), "hub double, authority double")
-        return IterationResult(state=out, steps=rounds, converged=True, history=[])
-    with loop_tuned_session(spark, max(n, n_edges)) as n_part:
-        return _hits_loop(v, n, e0, rounds, n_part)
+        res = IterationResult(state=out, steps=rounds, converged=True, history=[])
+    else:
+        with loop_tuned_session(spark, max(n, n_edges)) as n_part:
+            res = _hits_loop(v, n, e0, rounds, n_part)
+    # the result is its own checkpoint: the input checkpoints are dead
+    release_local_checkpoint(v)
+    release_local_checkpoint(e0)
+    return res
 
 
 def _hits_kernel(ids, src, dst, cols, rounds):
@@ -90,8 +96,6 @@ def _hits_kernel(ids, src, dst, cols, rounds):
 
 
 def _hits_loop(v, n, e0, rounds, n_part) -> IterationResult:
-    from usearch_spark.plans.iterative import release_local_checkpoint
-
     # TWO edge checkpoints, keyed by each phase's join key: the state is
     # checkpointed as hashpartitioning(id, n_part), so with shuffle_hash
     # hints every join in the round is CO-PARTITIONED — no per-round

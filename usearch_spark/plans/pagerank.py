@@ -14,11 +14,19 @@ config.go:39-49:
     min_sad (default 0.001); damping d = 0.85;
   - self-edges dropped (calculator.go:66-70).
 
-Scale shape per iteration: one join ranks⋈edges on id==src (edges
-pre-partitioned by src and cached — only ranks shuffles), one groupBy dst
-(partial aggregation map-side), one small dead-end agg (broadcast-joined
-against out_degrees), and a left join back onto the vertex set.  Lineage is
-truncated every iteration via the fixpoint harness.
+Three variants share ONE solve (``_rank``): uniform :func:`pagerank`
+(optionally warm-started), :func:`personalized_pagerank` (a per-vertex
+teleport column ``p``) and :func:`weighted_pagerank` (a per-edge weight
+column ``w``).  Each public function only builds its own input frames.
+
+Scale shape per superstep: edges are partitioned by src and checkpointed
+once per loop; the state is checkpointed as hashpartitioning(id, n_part)
+and carries each vertex's out-degree.  A step joins state⋈edges on
+id==src (co-partitioned: neither side moves), aggregates the messages by
+dst (the step's only exchange, partially aggregated map-side) and left-joins
+them back onto the state (co-partitioned again).  SAD and the dead-end mass
+the next step redistributes are observed metrics of the step's checkpoint
+job — one action per step — and that checkpoint truncates the lineage.
 
 Two physical strategies behind one API (strategy="auto"):
   - "distributed": the per-superstep DataFrame loop above — the 100-TB
@@ -39,7 +47,8 @@ from __future__ import annotations
 import math
 from functools import partial
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from usearch_spark.plans.iterative import (
@@ -90,24 +99,10 @@ def pagerank(
     invariant holds regardless of graph churn.  The fixpoint is identical
     to a cold run — the warm start changes step COUNT, not the answer.
     """
-    spark = vertices.sparkSession
-
-    # materialize the deduped vertex set ONCE: it feeds the count, the init
-    # join, and (via lineage) every step — without this, a derived input
-    # (e.g. vertices = union of edge endpoints over a big fact table) is
-    # re-scanned and re-shuffled for each of those uses
-    v = vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"]).localCheckpoint(eager=True)
-    n = v.count()
+    v, n = _vertex_set(vertices, id_col)
     if n == 0:
-        empty = v.withColumn("score", F.lit(0.0))
-        return IterationResult(state=empty, steps=0, converged=True, history=[])
-
-    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    if not edges_deduped:
-        e0 = e0.filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
-    e0 = e0.localCheckpoint(eager=True)
-    n_edges = e0.count()
-
+        return _no_vertices(v)
+    e0 = _edge_set(edges, src_col, dst_col, edges_deduped)
     s0 = None
     if init_scores is not None:
         # coalesce new vertices to 1/N, renormalize to sum 1, materialize
@@ -118,27 +113,10 @@ def pagerank(
         total = warm.agg(F.sum("_ws").alias("_tot"))
         s0 = (
             warm.join(F.broadcast(total))
-            .select("id", (F.col("_ws") / F.col("_tot")).alias("s0"))
+            .select("id", (F.col("_ws") / F.col("_tot")).alias("s"))
             .localCheckpoint(eager=True)
         )
-
-    if strategy == "auto":
-        strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
-    if strategy == "local":
-        res = _pagerank_local(v, e0, damping, min_sad, max_steps, init=s0)
-    else:
-        # loop partitions sized by the DOMINANT per-step volume: the
-        # ranks⋈edges join moves |E| rows, usually >> |V| (a vertex-count
-        # sizing left a 500k-edge graph on 2 partitions — 2 tasks on a
-        # 32-core box)
-        with loop_tuned_session(spark, max(n, n_edges)) as n_part:
-            res = _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=s0)
-    # the result is its own checkpoint: the input checkpoints taken above
-    # are dead, so free them now rather than at GC time (a re-ranking
-    # stream calls this once per micro-batch)
-    for cp in (v, e0, s0):
-        release_local_checkpoint(cp)
-    return res
+    return _rank(v, n, e0, damping, min_sad, max_steps, strategy, init=s0)
 
 
 def personalized_pagerank(
@@ -165,28 +143,15 @@ def personalized_pagerank(
     single-task numpy solve for small graphs, per-superstep DataFrame loop
     at scale (the teleport vector rides the state as one extra column).
     """
-    spark = vertices.sparkSession
     if not sources:
         raise ValueError("personalized_pagerank needs a non-empty source set")
-    v = vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"]).localCheckpoint(eager=True)
-    n = v.count()
+    v, n = _vertex_set(vertices, id_col)
     if n == 0:
-        empty = v.withColumn("score", F.lit(0.0))
-        return IterationResult(state=empty, steps=0, converged=True, history=[])
-
-    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    if not edges_deduped:
-        e0 = e0.filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
-    e0 = e0.localCheckpoint(eager=True)
-    n_edges = e0.count()
-    p_val = 1.0 / len(set(sources))
-    p_col = F.when(F.col("id").isin(list(set(sources))), F.lit(p_val)).otherwise(F.lit(0.0))
-    if strategy == "auto":
-        strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
-    if strategy == "local":
-        return _pagerank_local(v, e0, damping, min_sad, max_steps, teleport=p_col)
-    with loop_tuned_session(spark, max(n, n_edges)) as n_part:
-        return _ppr_loop(spark, v, e0, damping, min_sad, max_steps, n_part, p_col)
+        return _no_vertices(v)
+    e0 = _edge_set(edges, src_col, dst_col, edges_deduped)
+    seeds = list(set(sources))
+    p = F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
+    return _rank(v, n, e0, damping, min_sad, max_steps, strategy, teleport=p)
 
 
 def _ppr_push_task(pdf, seeds, p_val, d, omd, eps, rounds):
@@ -290,18 +255,10 @@ def ppr_forward_push(
     the shared single 8dp round, and support membership stays exact
     (a vertex is touched iff it ever RECEIVES a push, not a float test).
     """
-    from usearch_spark.plans.iterative import (
-        LOCAL_SOLVE_MAX_ROWS,
-        release_local_checkpoint,
-    )
-
     spark = edges.sparkSession
     if not sources:
         raise ValueError("ppr_forward_push needs a non-empty source set")
-    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    if not edges_deduped:
-        e0 = e0.filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
-    e = e0.localCheckpoint(eager=True)
+    e = _edge_set(edges, src_col, dst_col, edges_deduped)
     seeds = sorted(set(sources))
     p_val = 1.0 / len(seeds)
     d, omd = damping, 1.0 - damping
@@ -322,7 +279,9 @@ def ppr_forward_push(
         .withColumnRenamed("src", "id")
         .localCheckpoint(eager=True)
     )
-    seed_df = spark.createDataFrame([(str(s),) for s in seeds], "id string").select(
+    # from Arrow: a frame built from a Python list is a PythonRDD, whose
+    # every action waits on Python workers
+    seed_df = spark.createDataFrame(pa.table({"id": pa.array([str(s) for s in seeds], pa.string())})).select(
         F.col("id").cast(id_type)
     )
     fr = F.col("r") > F.lit(eps) * F.coalesce(F.col("od"), F.lit(0)).cast("double")
@@ -351,7 +310,7 @@ def ppr_forward_push(
                 .groupBy("id")
                 .agg(F.sum("mr").alias("add_r"))
             )
-            seed_add = (d * dead_mass) * p_val  # driver float, like _ppr_loop's residual
+            seed_add = (d * dead_mass) * p_val  # driver float, like _pagerank_loop's residual
             base = state.select("id", "p", "r", "od").join(msgs, "id", "full")
             nxt = base.select(
                 "id",
@@ -398,12 +357,9 @@ def weighted_pagerank(
     Duplicate (src,dst) edges keep their max weight (deterministic dedup);
     self-edges are dropped.  Same adaptive local/distributed split.
     """
-    spark = vertices.sparkSession
-    v = vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"]).localCheckpoint(eager=True)
-    n = v.count()
+    v, n = _vertex_set(vertices, id_col)
     if n == 0:
-        empty = v.withColumn("score", F.lit(0.0))
-        return IterationResult(state=empty, steps=0, converged=True, history=[])
+        return _no_vertices(v)
     e0 = (
         edges.select(
             F.col(src_col).alias("src"),
@@ -415,219 +371,77 @@ def weighted_pagerank(
         .agg(F.max("w").alias("w"))
         .localCheckpoint(eager=True)
     )
+    return _rank(v, n, e0, damping, min_sad, max_steps, strategy)
+
+
+def _vertex_set(vertices: DataFrame, id_col: str) -> tuple[DataFrame, int]:
+    """The deduped vertex ids, checkpointed ONCE, and their count: the set
+    feeds the count, the init join and (via lineage) every step — without
+    the checkpoint a derived input (e.g. vertices = union of edge endpoints
+    over a big fact table) is re-scanned and re-shuffled for each use."""
+    v = vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"]).localCheckpoint(eager=True)
+    return v, v.count()
+
+
+def _edge_set(edges: DataFrame, src_col: str, dst_col: str, edges_deduped: bool) -> DataFrame:
+    """The checkpointed (src, dst) edge set, self-edges and duplicates
+    dropped unless the caller vouches for ``edges_deduped``."""
+    e0 = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    if not edges_deduped:
+        e0 = e0.filter(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
+    return e0.localCheckpoint(eager=True)
+
+
+def _no_vertices(v: DataFrame) -> IterationResult:
+    return IterationResult(state=v.withColumn("score", F.lit(0.0)), steps=0, converged=True, history=[])
+
+
+def _rank(
+    v: DataFrame,
+    n: int,
+    e0: DataFrame,
+    damping: float,
+    min_sad: float,
+    max_steps: int,
+    strategy: str,
+    teleport: Column | None = None,
+    init: DataFrame | None = None,
+) -> IterationResult:
+    """The one PageRank solve over the checkpointed vertex set ``v`` (``n``
+    ids) and edge set ``e0`` (with a weight column ``w`` when weighted).
+    ``teleport``: the per-vertex teleport column of personalized PageRank;
+    ``init``: the checkpointed (id, s) warm-start vector.  Picks the
+    strategy, runs it, and releases the input checkpoints."""
     n_edges = e0.count()
+    vs = v if init is None else v.join(init, "id")
+    if teleport is not None:
+        vs = vs.withColumn("p", teleport)
     if strategy == "auto":
         strategy = "local" if n + n_edges <= LOCAL_SOLVE_MAX_ROWS else "distributed"
     if strategy == "local":
-        kernel = partial(_weighted_pagerank_kernel, d=damping, min_sad=min_sad, max_steps=max_steps)
-        return local_graph_fixpoint(v, e0, kernel, "score double")
-    with loop_tuned_session(spark, max(n, n_edges)) as n_part:
-        return _weighted_pagerank_loop(v, n, e0, damping, min_sad, max_steps, n_part)
+        kernel = partial(_pagerank_kernel, d=damping, min_sad=min_sad, max_steps=max_steps)
+        res = local_graph_fixpoint(vs, e0, kernel, "score double")
+    else:
+        # loop partitions sized by the DOMINANT per-step volume: the
+        # ranks⋈edges join moves |E| rows, usually >> |V| (a vertex-count
+        # sizing left a 500k-edge graph on 2 partitions — 2 tasks on a
+        # 32-core box)
+        with loop_tuned_session(v.sparkSession, max(n, n_edges)) as n_part:
+            res = _pagerank_loop(vs, n, e0, damping, min_sad, max_steps, n_part)
+    # the result is its own checkpoint: the input checkpoints are dead, so
+    # free them now rather than at GC time (a re-ranking stream calls this
+    # once per micro-batch)
+    for cp in (v, e0, init):
+        release_local_checkpoint(cp)
+    return res
 
 
-def _weighted_pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps):
-    """:func:`_pagerank_kernel`'s recurrence with weight-proportional
-    messages (``cols["w"]`` per edge) — the local strategy's kernel."""
-    import numpy as np
-
-    nv = len(ids)
-    track_sad = min_sad > 0.0
-    w_all = np.asarray(cols["w"], dtype="float64")
-    src_known = ~np.isnan(src_f)
-    both = src_known & ~np.isnan(dst_f)
-    outw = np.bincount(src_f[src_known].astype("int64"), weights=w_all[src_known], minlength=nv)
-    src = src_f[both].astype("int64")
-    dst = dst_f[both].astype("int64")
-    w = w_all[both]
-    dead = outw == 0.0
-    score = np.full(nv, 1.0 / nv)
-    sads: list[float] = []
-    converged = False
-    for _ in range(max_steps):
-        res_prev = score[dead].sum() / nv
-        msg = np.bincount(dst, weights=score[src] * w / outw[src], minlength=nv)
-        new = (1.0 - d) / nv + d * msg + d * res_prev
-        sad = float(np.abs(new - score).sum()) if track_sad else math.inf
-        sads.append(sad)
-        score = new
-        if track_sad and sad < min_sad:
-            converged = True
-            break
-    return {"score": score, "converged": converged, "history": [{"sad": s} for s in sads]}
-
-
-def _weighted_pagerank_loop(v, n, e0, damping, min_sad, max_steps, n_part) -> IterationResult:
-    # localCheckpoint (not .cache()) for the loop-invariant frames: eager
-    # blocks the loop reads directly, released the moment the loop ends —
-    # .cache() pinned them until the caller's clearCache (r15-verdict #3)
-    e = e0.repartition(n_part, "src").localCheckpoint(eager=True)
-    out_w = (
-        e.groupBy("src")
-        .agg(F.sum("w").alias("outw"))
-        .withColumnRenamed("src", "id")
-        .localCheckpoint(eager=True)
-    )
-    res_metric = (
-        F.coalesce(F.sum(F.when(F.col("outw").isNull(), F.col("score"))), F.lit(0.0)) / n
-    )
-    ranks, init_metrics = checkpoint_with_metrics(
-        v.withColumn("score", F.lit(1.0 / n)).join(out_w, "id", "left").repartition(n_part, "id"),
-        res=res_metric,
-    )
-    residual = {"prev": float(init_metrics["res"])}
-    d = damping
-    track_sad = min_sad > 0.0
-
-    def step_fn(current: DataFrame, step: int):
-        contribs = (
-            current.filter(F.col("outw").isNotNull())
-            .hint("shuffle_hash")
-            .join(e, F.col("id") == e.src, "inner")
-            .select(
-                F.col("dst").alias("id"),
-                (F.col("score") * F.col("w") / F.col("outw")).alias("msg"),
-            )
-            .groupBy("id")
-            .agg(F.sum("msg").alias("msg_sum"))
-        )
-        new_ranks = (
-            current.withColumnRenamed("score", "old_score")
-            .join(contribs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * F.coalesce(F.col("msg_sum"), F.lit(0.0))
-                    + F.lit(d * residual["prev"])
-                ).alias("score"),
-                "old_score",
-                "outw",
-            )
-        )
-        new_ranks, metrics = checkpoint_with_metrics(
-            new_ranks,
-            project=["id", "score", "outw"],
-            sad=F.coalesce(F.sum(F.abs(F.col("score") - F.col("old_score"))), F.lit(0.0)),
-            res=res_metric,
-        )
-        residual["prev"] = float(metrics["res"])
-        sad = float(metrics["sad"]) if track_sad else float("inf")
-        return new_ranks, {"sad": sad}
-
-    result = run_fixpoint(
-        ranks,
-        step_fn,
-        should_continue=lambda m, step: m["sad"] >= min_sad,
-        max_steps=max_steps,
-        checkpoint_every=10**9,
-    )
-    release_local_checkpoint(e)
-    release_local_checkpoint(out_w)
-    result.state = result.state.select("id", "score")
-    return result
-
-
-def _ppr_loop(spark, v, e0, damping, min_sad, max_steps, n_part, p_col) -> IterationResult:
-    """Distributed PPR superstep loop — same plan shape as _pagerank_loop
-    (one edge join + one agg + one state join per step, metrics observed on
-    the checkpoint job) with the teleport weight as a state column."""
-    e = e0.repartition(n_part, "src").localCheckpoint(eager=True)
-    out_deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .withColumnRenamed("src", "id")
-        .localCheckpoint(eager=True)
-    )
-
-    # residual = total score stranded on dead ends (NOT divided by N: PPR
-    # redistributes it through the teleport vector, not uniformly)
-    res_metric = F.coalesce(F.sum(F.when(F.col("outdeg").isNull(), F.col("score"))), F.lit(0.0))
-
-    ranks, init_metrics = checkpoint_with_metrics(
-        v.withColumn("p", p_col)
-        .withColumn("score", F.col("p"))
-        .join(out_deg, "id", "left")
-        .repartition(n_part, "id"),
-        res=res_metric,
-    )
-    residual = {"prev": float(init_metrics["res"])}
-    d = damping
-    track_sad = min_sad > 0.0
-
-    def step_fn(current: DataFrame, step: int):
-        contribs = (
-            current.filter(F.col("outdeg").isNotNull())
-            .hint("shuffle_hash")
-            .join(e, F.col("id") == e.src, "inner")
-            .select(F.col("dst").alias("id"), (F.col("score") / F.col("outdeg")).alias("msg"))
-            .groupBy("id")
-            .agg(F.sum("msg").alias("msg_sum"))
-        )
-        new_ranks = (
-            current.withColumnRenamed("score", "old_score")
-            .join(contribs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                "p",
-                (
-                    F.lit(1.0 - d) * F.col("p")
-                    + F.lit(d) * F.coalesce(F.col("msg_sum"), F.lit(0.0))
-                    + F.lit(d * residual["prev"]) * F.col("p")
-                ).alias("score"),
-                "old_score",
-                "outdeg",
-            )
-        )
-        new_ranks, metrics = checkpoint_with_metrics(
-            new_ranks,
-            project=["id", "p", "score", "outdeg"],
-            sad=F.coalesce(F.sum(F.abs(F.col("score") - F.col("old_score"))), F.lit(0.0)),
-            res=res_metric,
-        )
-        residual["prev"] = float(metrics["res"])
-        sad = float(metrics["sad"]) if track_sad else float("inf")
-        return new_ranks, {"sad": sad}
-
-    result = run_fixpoint(
-        ranks,
-        step_fn,
-        should_continue=lambda m, step: m["sad"] >= min_sad,
-        max_steps=max_steps,
-        checkpoint_every=10**9,
-    )
-    release_local_checkpoint(e)
-    release_local_checkpoint(out_deg)
-    result.state = result.state.select("id", "score")
-    return result
-
-
-def _pagerank_local(v, e0, damping, min_sad, max_steps, teleport=None, init=None) -> IterationResult:
-    """Single-task solve: vertices and edges stream through one mapInPandas
-    task which runs the reference recurrence with numpy bincount mat-vecs.
-    One Spark job materializes the result; steps/SAD history ride along so
-    the driver reads them from the checkpointed output without
-    recomputing."""
-    # vertex rows carry the teleport weight in ``w``; uniform pagerank
-    # passes teleport=None and ``w`` stays null throughout.  A warm start
-    # rides the same pattern in ``s`` (normalized init score).
-    w_col = teleport if teleport is not None else F.lit(None).cast("double")
-    vsel = v if init is None else v.join(init, "id")
-    s_col = F.col("s0") if init is not None else F.lit(None).cast("double")
-    kernel = partial(
-        _pagerank_kernel,
-        d=damping,
-        min_sad=min_sad,
-        max_steps=max_steps,
-        personalized=teleport is not None,
-        warm=init is not None,
-    )
-    return local_graph_fixpoint(vsel.select("id", w_col.alias("w"), s_col.alias("s")), e0, kernel, "score double")
-
-
-def _pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps, personalized, warm):
-    """The reference recurrence as numpy bincount mat-vecs (the kernel of
-    :func:`_pagerank_local`); ``cols`` carries the teleport vector ``w``
-    and the warm-start vector ``s`` per vertex."""
+def _pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps):
+    """The reference recurrence as numpy bincount mat-vecs — the local
+    strategy's kernel.  Optional ``cols``: per-edge weights ``w``
+    (messages score·w/Σw_out instead of score/out-degree), the per-vertex
+    teleport vector ``p`` (the start vector, and where the teleport and
+    dead-end mass restart) and a per-vertex warm-start vector ``s``."""
     import numpy as np
 
     nv = len(ids)
@@ -638,22 +452,29 @@ def _pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps, personalize
     # join back onto the vertex set drops unknown-dst messages)
     src_known = ~np.isnan(src_f)
     both = src_known & ~np.isnan(dst_f)
-    outdeg = np.bincount(src_f[src_known].astype("int64"), minlength=nv).astype("float64")
+    w_all = np.asarray(cols["w"], dtype="float64") if "w" in cols else None
+    outdeg = np.bincount(
+        src_f[src_known].astype("int64"),
+        weights=None if w_all is None else w_all[src_known],
+        minlength=nv,
+    ).astype("float64")
     src = src_f[both].astype("int64")
     dst = dst_f[both].astype("int64")
+    w = None if w_all is None else w_all[both]
     dead = outdeg == 0.0
-    if personalized:
-        pvec = np.asarray(cols["w"], dtype="float64")
-        score = pvec.copy()
-    elif warm:
+    pvec = np.asarray(cols["p"], dtype="float64") if "p" in cols else None
+    if pvec is not None:
+        score = pvec
+    elif "s" in cols:
         score = np.asarray(cols["s"], dtype="float64")
     else:
         score = np.full(nv, 1.0 / nv)
     sads: list[float] = []
     converged = False
     for _ in range(max_steps):
-        msg = np.bincount(dst, weights=score[src] / outdeg[src], minlength=nv)
-        if personalized:
+        share = score[src] / outdeg[src] if w is None else score[src] * w / outdeg[src]
+        msg = np.bincount(dst, weights=share, minlength=nv)
+        if pvec is not None:
             # dead-end mass restarts through the teleport vector
             res_prev = score[dead].sum()
             new = (1.0 - d) * pvec + d * msg + d * res_prev * pvec
@@ -669,50 +490,69 @@ def _pagerank_kernel(ids, src_f, dst_f, cols, d, min_sad, max_steps, personalize
     return {"score": score, "converged": converged, "history": [{"sad": s} for s in sads]}
 
 
-def _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=None) -> IterationResult:
+def _pagerank_loop(v, n, e0, damping, min_sad, max_steps, n_part) -> IterationResult:
+    """The distributed superstep loop.  ``v`` is the vertex set plus the
+    teleport column ``p`` (personalized) or the warm-start column ``s``;
+    ``e0`` carries a weight column ``w`` when weighted.
+
+    The co-partitioning contract: edges are partitioned by src ONCE, and
+    every state checkpoint carries hashpartitioning(id, n_part), so with
+    the shuffle_hash hints both joins of a step are co-partitioned and the
+    message aggregation is the step's only exchange."""
+    weighted = "w" in e0.columns
+    teleport = "p" in v.columns
     e = e0.repartition(n_part, "src").localCheckpoint(eager=True)
     out_deg = (
         e.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
+        .agg((F.sum("w") if weighted else F.count(F.lit(1))).alias("outdeg"))
         .withColumnRenamed("src", "id")
         .localCheckpoint(eager=True)
     )
 
-    res_metric = (
-        F.coalesce(F.sum(F.when(F.col("outdeg").isNull(), F.col("score"))), F.lit(0.0)) / n
-    )
+    # score stranded on dead ends; uniform PageRank spreads it over all N
+    # vertices, personalized PageRank restarts it through the teleport
+    # vector (so it is NOT divided by N there)
+    dead_mass = F.coalesce(F.sum(F.when(F.col("outdeg").isNull(), F.col("score"))), F.lit(0.0))
+    res_metric = dead_mass if teleport else dead_mass / n
 
-    # step 1: uniform 1/N (reference compute.go:44-48), or the normalized
-    # warm-start vector when given; carry out-degree on the state so
+    # step 1: uniform 1/N (reference compute.go:44-48), the teleport vector,
+    # or the normalized warm-start vector; carry out-degree on the state so
     # per-step dead-end mass needs no extra join.  The dead-end residual of
     # THIS state — read by the NEXT step, the reference's double-buffered
     # residual_0/1 accumulator — is observed during the same
     # materialization and carried forward as a driver-side scalar, so a step
     # needs no residual subquery/broadcast of its own.
-    v_init = (
-        v.withColumn("score", F.lit(1.0 / n))
-        if init is None
-        else v.join(init, "id").withColumnRenamed("s0", "score")
-    )
+    keep = ["id", "p"] if teleport else ["id"]
+    score0 = F.col("p") if teleport else F.col("s") if "s" in v.columns else F.lit(1.0 / n)
     ranks, init_metrics = checkpoint_with_metrics(
-        v_init.join(out_deg, "id", "left").repartition(n_part, "id"),
+        v.select(*keep, score0.alias("score")).join(out_deg, "id", "left").repartition(n_part, "id"),
         res=res_metric,
     )
     residual = {"prev": float(init_metrics["res"])}
 
     d = damping
     track_sad = min_sad > 0.0
+    if weighted:
+        msg = F.col("score") * F.col("w") / F.col("outdeg")
+    else:
+        msg = F.col("score") / F.col("outdeg")
 
     def step_fn(current: DataFrame, step: int):
-        # messages: score/outdeg to each out-neighbor
+        # messages: score/outdeg (score·w/Σw_out when weighted) to each
+        # out-neighbor
         contribs = (
             current.filter(F.col("outdeg").isNotNull())
             .hint("shuffle_hash")
             .join(e, F.col("id") == e.src, "inner")
-            .select(F.col("dst").alias("id"), (F.col("score") / F.col("outdeg")).alias("msg"))
+            .select(F.col("dst").alias("id"), msg.alias("msg"))
             .groupBy("id")
             .agg(F.sum("msg").alias("msg_sum"))
         )
+        received = F.lit(d) * F.coalesce(F.col("msg_sum"), F.lit(0.0))
+        if teleport:
+            score = F.lit(1.0 - d) * F.col("p") + received + F.lit(d * residual["prev"]) * F.col("p")
+        else:
+            score = F.lit((1.0 - d) / n) + received + F.lit(d * residual["prev"])
         # shuffle_hash on the aggregated side: the state checkpoint carries
         # hashpartitioning(id, n_part) and contribs' agg output is already
         # hash(id)-partitioned, so the join-back is CO-PARTITIONED with no
@@ -721,16 +561,7 @@ def _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=No
         new_ranks = (
             current.withColumnRenamed("score", "old_score")
             .join(contribs.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit((1.0 - d) / n)
-                    + F.lit(d) * F.coalesce(F.col("msg_sum"), F.lit(0.0))
-                    + F.lit(d * residual["prev"])
-                ).alias("score"),
-                "old_score",
-                "outdeg",
-            )
+            .select(*keep, score.alias("score"), "old_score", "outdeg")
         )
         # ONE action per step: SAD convergence AND the next step's dead-end
         # residual both ride the checkpoint job as observed metrics; the
@@ -739,7 +570,7 @@ def _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=No
         # release the superseded step eagerly
         new_ranks, metrics = checkpoint_with_metrics(
             new_ranks,
-            project=["id", "score", "outdeg"],
+            project=[*keep, "score", "outdeg"],
             sad=F.coalesce(F.sum(F.abs(F.col("score") - F.col("old_score"))), F.lit(0.0)),
             res=res_metric,
         )
@@ -754,7 +585,9 @@ def _pagerank_loop(spark, v, n, e0, damping, min_sad, max_steps, n_part, init=No
         max_steps=max_steps,
         checkpoint_every=10**9,  # step_fn checkpoints internally
     )
-    release_local_checkpoint(e)
-    release_local_checkpoint(out_deg)
+    # run_fixpoint releases only the checkpoints its steps made; the
+    # initial state is dead too once a step has superseded it
+    for cp in (e, out_deg, ranks if result.steps else None):
+        release_local_checkpoint(cp)
     result.state = result.state.select("id", "score")
     return result
